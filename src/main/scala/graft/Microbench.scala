@@ -201,18 +201,13 @@ object Microbench {
 
       // orderWide: 50k orders ⋈ 100k details, ±5ms interval join (A19 shape)
       // — the state-heaviest pipeline (insert + range probe + eviction per
-      // row on BOTH sides), measured on each bundled state-store provider:
-      // the default HDFSBacked (JVM-heap maps, fine until state outgrows
-      // the heap) and RocksDB (off-heap, the provider a 100 TB deployment
-      // runs, bounded memory + changelog checkpointing)
-      // round-7 VERDICT #6 follow-up: provider × watermark-delay sweep.
+      // row on BOTH sides), on the default state-store provider.
+      // round-7 VERDICT #6 follow-up: watermark-delay sweep.
       // State held = watermark delay × input rate (both sides buffer every
       // in-delay row), so "30 seconds" is 10× the state of "3 seconds" at
       // the same input. lastProgress.stateOperators is the cleanup proof:
       // rows held at end must track the DELAY, not the input size.
-      def orderWideRate(provider: String, label: String,
-                        wmDelay: String = "3 seconds"): Unit = {
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
+      def orderWideRate(label: String, wmDelay: String = "3 seconds"): Unit = {
         val oiMs = MemoryStream[OrderInfo]
         val odMs = MemoryStream[OrderDetail]
         val owQ = Pipelines.orderWide(oiMs.toDS(), odMs.toDS(), wmDelay = wmDelay)
@@ -236,15 +231,8 @@ object Microbench {
           s" (input 150000; eviction ${if (stateRows < 150000) "WORKS" else "BROKEN"})")
         owQ.stop()
       }
-      val hdfsProv =
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-      val rocksProv =
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-      orderWideRate(hdfsProv, "HDFSBacked (default)")
-      orderWideRate(rocksProv, "RocksDB")
-      orderWideRate(hdfsProv, "HDFSBacked, 10x state (wm 30s)", "30 seconds")
-      orderWideRate(rocksProv, "RocksDB, 10x state (wm 30s)", "30 seconds")
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      orderWideRate("wm 3s")
+      orderWideRate("10x state (wm 30s)", "30 seconds")
 
       // streamingIngest: 100k docs, 30% in-stream dups, 20k-fingerprint
       // store (A17/ingest-dedup shape: anti-join + dropDuplicates state)

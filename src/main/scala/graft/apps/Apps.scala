@@ -14,15 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object Apps {
 
-  /** State-API selector (D6): `spark.graft.stateApi` = `v1`
-    * (flatMapGroupsWithState, default) or `v2` (transformWithState — the
-    * Stateful tws twins; needs the RocksDB state-store provider, which
-    * [[Mains.start]] configures when this key says v2). One conf key switches
-    * the whole keyed-state trio, so a deployment can roll the state API
-    * forward without touching app code. */
-  private def stateApiV2(df: DataFrame): Boolean =
-    df.sparkSession.conf.get("spark.graft.stateApi", "v1") == "v2"
-
   /** Parsed log DF (Pipelines.rawLogSchema shape) → typed LogEvent view. */
   def toLogEvents(parsed: DataFrame): Dataset[LogEvent] = {
     import parsed.sparkSession.implicits._
@@ -60,22 +51,10 @@ object Apps {
     import parsed.sparkSession.implicits._
     val dirty = parsed.filter(col("common").isNull || col("ts").isNull)
     val clean = parsed.filter(col("common").isNotNull && col("ts").isNotNull)
-    val typed = clean.as[graft.streaming.RawLog]
-    // Build a FRESH repaired stream per output branch: the three sink queries
-    // each re-execute the plan with their own state store anyway, but a tws
-    // plan embeds its StatefulProcessor INSTANCE, and concurrent query starts
-    // race on that shared instance's driver-side handle (setHandle/init
-    // interleave → one query registers its state variable on another's handle
-    // → STATEFUL_PROCESSOR_DUPLICATE_STATE_VARIABLE_DEFINED). One instance
-    // per branch makes each query's driver init self-contained. The fMGWS
-    // path has no per-instance handle but gets the same treatment for
-    // uniformity.
-    def repaired(): DataFrame =
-      (if (stateApiV2(parsed)) Stateful.repairIsNewRawTws(typed)
-       else Stateful.repairIsNewRaw(typed)).toDF()
-    val (start, _, _) = Pipelines.splitLog(repaired())
-    val (_, page, _) = Pipelines.splitLog(repaired())
-    val (_, _, display) = Pipelines.splitLog(repaired())
+    // one repaired frame for all three branches: each sink query executes
+    // the plan with its own state store
+    val (start, page, display) =
+      Pipelines.splitLog(Stateful.repairIsNewRaw(clean.as[graft.streaming.RawLog]).toDF())
     Map("dwd_start_log" -> start, "dwd_page_log" -> toLogEvents(page).toDF(),
       "dwd_display_log" -> display, "dwd_dirty_log" -> dirty)
   }
@@ -85,9 +64,7 @@ object Apps {
     val page = inputs("dwd_page_log")
     import page.sparkSession.implicits._
     val events = watermarked(page.as[LogEvent])
-    Map("dwm_unique_visit" ->
-      (if (stateApiV2(page)) Stateful.dailyUvTws(events)
-       else Stateful.dailyUv(events)).toDF())
+    Map("dwm_unique_visit" -> Stateful.dailyUv(events).toDF())
   }
 
   /** UserJumpDetailApp (app/dwm/UserJumpDetailApp.java): bounce sessions. */
@@ -95,9 +72,7 @@ object Apps {
     val page = inputs("dwd_page_log")
     import page.sparkSession.implicits._
     val events = watermarked(page.as[LogEvent])
-    Map("dwm_user_jump_detail" ->
-      (if (stateApiV2(page)) Stateful.detectBouncesTws(events)
-       else Stateful.detectBounces(events)).toDF())
+    Map("dwm_user_jump_detail" -> Stateful.detectBounces(events).toDF())
   }
 
   /** OrderWideApp (app/dwm/OrderWideApp.java): order ⋈ detail interval join +

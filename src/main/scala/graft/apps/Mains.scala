@@ -30,14 +30,6 @@ import org.apache.spark.sql.types._
   * consequence: windowed aggregates only emit panes the WATERMARK has closed,
   * so the last windows of a drain run emit on the next run (state is in the
   * checkpoint) — the same behavior as the reference's event-time windows.
-  *
-  * One state-API-v2 exception to drain-and-exit: `unique_visit` on tws uses a
-  * NATIVE processing-time TTL (the StateTtlConfig contract), and a
-  * ProcessingTime-mode transformWithState keeps scheduling micro-batches
-  * under AvailableNow while TTL timers are pending — it runs as a SERVICE.
-  * Callers poll the sink and `stop()` when drained (MainsSpec shows the
-  * pattern); `awaitTermination` on it never returns. The v1
-  * (flatMapGroupsWithState) binding drains and exits like every other app.
   */
 object Mains {
 
@@ -153,15 +145,6 @@ object Mains {
   def start(spark: SparkSession, app: String, inDir: String, outDir: String,
             ckptDir: String, trigger: Trigger = Trigger.AvailableNow(),
             sourceOptions: Map[String, String] = Map.empty): Seq[StreamingQuery] = {
-    // state API v2 (transformWithState twins, selected by spark.graft.stateApi)
-    // requires the RocksDB provider; the checkpoint-file checksum writer
-    // deadlocks in some containers (round-1 finding, StatefulSpec) — disable.
-    // Set BEFORE any query starts: provider choice binds at query start.
-    if (spark.conf.get("spark.graft.stateApi", "v1") == "v2") {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      spark.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-    }
     def sink(outputs: Map[String, DataFrame]) = sinkAll(outputs, outDir, ckptDir, trigger)
     def streamJson(spark: SparkSession, inDir: String, topic: String, schema: StructType) =
       Mains.streamJson(spark, inDir, topic, schema, sourceOptions)

@@ -1054,13 +1054,15 @@ object Dedup {
       .agg(sort_array(collect_set(col("source"))).as("ss"))
       .groupBy("ss").agg(count(lit(1)).as("n"))
       .persist()
-    val nCells = cellsDf.count()
-    require(nCells <= cellCap,
-      s"sourceOverlap: $nCells source-combination cells exceed the " +
-        s"$cellCap budget — shrink the source dimension upstream or raise " +
-        "cellCap deliberately")
-    val cells = cellsDf.as[(Seq[String], Long)].collect()
-    cellsDf.unpersist(blocking = false)
+    // released on the refusal path too (ADVICE r18 #1)
+    val cells = try {
+      val nCells = cellsDf.count()
+      require(nCells <= cellCap,
+        s"sourceOverlap: $nCells source-combination cells exceed the " +
+          s"$cellCap budget — shrink the source dimension upstream or raise " +
+          "cellCap deliberately")
+      cellsDf.as[(Seq[String], Long)].collect()
+    } finally cellsDf.unpersist(blocking = false)
     val sizes = scala.collection.mutable.Map.empty[String, Long]
     val inter = scala.collection.mutable.Map.empty[(String, String), Long]
     cells.foreach { case (ss, nCell) =>

@@ -2596,7 +2596,10 @@ object Relational {
     // slot_id asc) is the same total order row_number ranked, and ss is the
     // user's full distinct slot set so ns - minCo + 1 matches
     val prefixUdf = udf { ss: Seq[Int] =>
-      ss.sortBy(s => (fq(s), s)).take(ss.length - minCoI + 1)
+      // fq is built from the same ua slot sets, so every slot has a count
+      def freq(s: Int): Long = fq.getOrElse(s, throw new IllegalStateException(
+        s"coActivityCandidates: slot $s has no frequency in the slot-frequency map"))
+      ss.sortBy(s => (freq(s), s)).take(ss.length - minCoI + 1)
     }
     // persisted: the frame feeds BOTH self-join sides; the cache
     // materializes inside the first consumer's action. Released by the
@@ -3501,7 +3504,7 @@ object Relational {
     * scan; the oracle does exactly that, which is the point — different
     * construction, same integers). The exact moments ride as replicate −1.
     * Cells are ADDITIVE LONGS ⇒ the streaming twin maintains them with the
-    * shared CellStore merge. */
+    * shared EpochStore merge. */
   /** The Carter–Wegman affine family's modulus (largest prime < 2⁵²) and
     * per-row 52-bit md5 digest — private[graft] so MicrobenchBootstrap
     * decomposes the REAL production expressions, not a copy that can

@@ -1757,7 +1757,7 @@ object TextOps {
   /** Per-source counts behind [[bhFdr]]: docs and length-filter passes
     * (n_chars > 300 — a stored integer column, no string-length semantics
     * to diverge cross-engine). Both are additive cells, so the maintained
-    * twin rides [[graft.streaming.CellStore]] unchanged. */
+    * twin rides [[graft.streaming.EpochStore]] unchanged. */
   private[graft] def bhCounts(docFrame: DataFrame): DataFrame =
     docFrame.groupBy("source").agg(
       count(lit(1)).as("n"),
@@ -1821,7 +1821,7 @@ object TextOps {
     * mirrored-IEEE discipline, rank, threshold, step-up — see
     * [[bhFdrFrom]] for why the walk is deliberately eager). The
     * (source → n, passes) pair is the additive sufficient
-    * statistic — the maintained twin is CellStore's simplest member
+    * statistic — the maintained twin is EpochStore's simplest member
     * ([[graft.streaming.MixtureStream.applyBhBatch]]). */
   def bhFdr(spark: SparkSession, dir: String, alpha: Double = 0.05): DataFrame =
     bhFdrFrom(bhCounts(docs(spark, dir)), alpha)
@@ -2324,7 +2324,7 @@ object TextOps {
 
   /** The [[sourceAblation]] walk from its two sufficient statistics — the
     * per-source scalar sums (source, n_docs, tokens, s) and the distinct
-    * (source, sh) 3-shingle cells. The scalars are an additive CellStore
+    * (source, sh) 3-shingle cells. The scalars are an additive EpochStore
     * row per source; the cells are the SAME first-seen (source, shingle)
     * store q181/q182/q187 already maintain
     * ([[graft.streaming.MixtureStream]]) — q195 is a FOURTH report off
@@ -2811,7 +2811,7 @@ object TextOps {
     * distinct bigram over `trainDocs`. This is the maintainer's ADDITIVE
     * state: a batch's counts simply add per gram, so
     * [[graft.streaming.LmStream]] carries exactly this frame in the shared
-    * CellStore and everything else (marginals, continuation counts, ctot)
+    * EpochStore and everything else (marginals, continuation counts, ctot)
     * derives from it at read time. */
   def knGramCounts(trainDocs: DataFrame): DataFrame =
     trainDocs.select(explode(gramCountsUdf(2)(col("text"))))
@@ -3011,13 +3011,15 @@ object TextOps {
       .agg(sort_array(collect_set(col("source"))).as("ss"))
       .groupBy("ss").agg(count(lit(1)).as("n"))
       .persist()
-    val nCells = cellsDf.count()
-    require(nCells <= cellCap,
-      s"sourceSelect: $nCells source-combination cells exceed the " +
-        s"$cellCap budget — the source dimension is too wide for the cell " +
-        "closure; shrink it upstream or raise cellCap deliberately")
-    val cells = cellsDf.as[(Seq[String], Long)].collect()
-    cellsDf.unpersist(blocking = false)
+    // released on the refusal path too (ADVICE r18 #1)
+    val cells = try {
+      val nCells = cellsDf.count()
+      require(nCells <= cellCap,
+        s"sourceSelect: $nCells source-combination cells exceed the " +
+          s"$cellCap budget — the source dimension is too wide for the cell " +
+          "closure; shrink it upstream or raise cellCap deliberately")
+      cellsDf.as[(Seq[String], Long)].collect()
+    } finally cellsDf.unpersist(blocking = false)
     var live = cells.map { case (ss, n) => (ss.toSet, n) }
     val picks = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long, Long)]
     var coveredTotal = 0L

@@ -4,7 +4,6 @@ import graft.io.Io
 import graft.operators.Relational
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** STREAMING BOOTSTRAP-CI MAINTENANCE — the streaming twin of q169: metric
   * means WITH error bars, maintained continuously. The batch operator's
@@ -15,7 +14,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * plus the exact moments as replicate −1) simply ADD across batches. That
   * is the sixth maintained measure class (after additive sums, distinct
   * sketches, heavy hitters, rates/quantile cells, and ordered milestones):
-  * UNCERTAINTY-CARRYING metrics — and it rides the shared [[CellStore]]
+  * UNCERTAINTY-CARRYING metrics — and it rides the shared [[EpochStore]]
   * additive epoch-gated merge, here in its multi-column form (swc and sw
   * gate together per cell; a torn row is impossible).
   *
@@ -32,10 +31,10 @@ object BootstrapStream {
     * (cell, epoch). */
   def applyBatch(spark: SparkSession, delta: DataFrame, cellsPath: String,
                  epoch: Long, reps: Int = 32): Unit =
-    CellStore.mergeAdditive(spark,
+    EpochStore.mergeAdditive(spark,
       Relational.bootstrapCells(delta, reps)
         .withColumn("cell", concat_ws("|", col("segment"), col("rep"))),
-      cellsPath, epoch, Seq("swc", "sw"))
+      cellsPath, "cell", epoch, Seq("swc", "sw"))
 
   /** Current per-segment mean + percentile-bootstrap interval from the
     * maintained cells — the q169 output shape, equal to the batch operator
@@ -43,15 +42,4 @@ object BootstrapStream {
   def readBootstrap(spark: SparkSession, cellsPath: String): DataFrame =
     Relational.bootstrapFromCells(
       Io.readDim(spark, cellsPath).select("segment", "rep", "swc", "sw"))
-
-  /** Drive the maintenance from a streaming frame with
-    * (segment, okey, cents). */
-  def run(spark: SparkSession, rows: DataFrame, cellsPath: String,
-          checkpoint: String, reps: Int = 32): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (delta: DataFrame, epoch: Long) =>
-        applyBatch(spark, delta, cellsPath, epoch, reps)
-      }
-      .start()
 }

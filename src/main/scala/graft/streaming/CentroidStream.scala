@@ -4,11 +4,10 @@ import graft.io.Io
 import graft.operators.Similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** STREAMING CENTROID-DRIFT MAINTENANCE — the streaming twin of q193: the
   * per-source MMD sufficient statistics (count n, element-wise vector sum
-  * Σq) are ADDITIVE across batches, so the maintainer is the CellStore
+  * Σq) are ADDITIVE across batches, so the maintainer is the EpochStore
   * epoch-gate discipline extended to a VECTOR value column — the merge is
   * `zip_with(stored, fresh, +)` next to the long count, gating together
   * per source (a torn row is impossible). [[readDrift]] derives centroids
@@ -35,24 +34,13 @@ object CentroidStream {
       .groupBy("source")
       .agg(count(lit(1)).as("__dn"),
         graft.functions.Aggregators.vecSum(col("q")).as("__ds"))
-    val joined =
-      if (!Io.dimStoreHasData(storePath))
-        fresh.withColumn("__pn", lit(0L))
-          .withColumn("__ps", lit(null).cast("array<bigint>"))
-          .withColumn("__le", lit(null).cast("long"))
-      else
-        fresh.join(
-          Io.readDim(spark, storePath).select(col("source"),
-            col("n").as("__pn"), col("s").as("__ps"), col("last_epoch").as("__le")),
-          Seq("source"), "left")
-    val merged = joined
-      .filter(col("__le").isNull || col("__le") < epoch)
-      .select(col("source"),
-        (col("__dn") + coalesce(col("__pn"), lit(0L))).as("n"),
-        when(col("__ps").isNull, col("__ds"))
-          .otherwise(expr("zip_with(__ds, __ps, (x, y) -> x + y)")).as("s"),
-        lit(epoch).as("last_epoch"))
-    Io.upsertDim(spark, merged, storePath, "source", "last_epoch")
+    EpochStore.merge(spark, fresh, storePath, "source", epoch,
+      "n bigint, s array<bigint>") { prev =>
+      Seq(col("source"),
+        (col("__dn") + coalesce(prev("n"), lit(0L))).as("n"),
+        when(prev("s").isNull, col("__ds"))
+          .otherwise(zip_with(col("__ds"), prev("s"), _ + _)).as("s"))
+    }
   }
 
   /** Current pairwise drift matrix — the q193 output over everything
@@ -60,14 +48,4 @@ object CentroidStream {
   def readDrift(spark: SparkSession, storePath: String): DataFrame =
     Similarity.driftFromSums(
       Io.readDim(spark, storePath).select("source", "n", "s"))
-
-  /** Drive the maintenance from a streaming (source, embedding) frame. */
-  def run(spark: SparkSession, rows: DataFrame, storePath: String,
-          checkpoint: String): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (delta: DataFrame, epoch: Long) =>
-        applyBatch(spark, delta, storePath, epoch)
-      }
-      .start()
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.io.Io
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** STREAMING CONFORMAL CALIBRATION — the streaming twin of q184's
   * split-conformal thresholds: the calibration set is the `calK` SMALLEST
@@ -50,17 +49,6 @@ object ConformalStream {
         "transform(top, s -> named_struct('h', cast(-s.v as bigint), " +
           "'doc_id', s.id, 'score', s.p))").cast(candType))
       .select(lit("all").as("k"), col("__delta_ct"), col("__cands"))
-    val joined =
-      if (!Io.dimStoreHasData(storePath))
-        fresh.withColumn("__sc", emptyCands)
-          .withColumn("__pc", lit(0L))
-          .withColumn("__le", lit(null).cast("long"))
-      else
-        fresh.join(
-          Io.readDim(spark, storePath).select(col("k"),
-            col("cands").as("__sc"), col("total_docs").as("__pc"),
-            col("last_epoch").as("__le")),
-          Seq("k"), "left")
     // Dedup is per (h, doc_id), NOT per full struct: a doc re-delivered
     // with a mutated score must yield ONE calibration entry, with the MAX
     // score as the deterministic winner (round-11 ADVICE #4 — the old
@@ -71,23 +59,20 @@ object ConformalStream {
     // epoch replays are gated below); cross-epoch re-ingestion drifts the
     // count by the duplicate rate — exact dedup there would need per-doc
     // state, which this one-row store exists to avoid.
-    val merged = joined
-      .filter(col("__le").isNull || col("__le") < epoch)
-      .withColumn("__all", array_sort(
-        concat(coalesce(col("__sc"), emptyCands), col("__cands"))))
-      .select(col("k"),
-        (col("__delta_ct") + coalesce(col("__pc"), lit(0L))).as("total_docs"),
-        slice(expr(
-          // null-SAFE <=> (round-12 ADVICE #4): with plain `=`, a null
-          // h/doc_id makes the predicate NULL and filter() silently DROPS
-          // the element from the calibration set; <=> keeps the keep/dedup
-          // decision total even if an upstream change violates the current
-          // non-null contract
-          "filter(__all, (x, i) -> i + 1 >= size(__all) OR NOT " +
-            "(__all[i+1].h <=> x.h AND __all[i+1].doc_id <=> x.doc_id))"),
-          1, calK).as("cands"),
-        lit(epoch).as("last_epoch"))
-    Io.upsertDim(spark, merged, storePath, "k", "last_epoch")
+    EpochStore.merge(spark, fresh, storePath, "k", epoch,
+      s"total_docs bigint, cands $candType") { prev =>
+      val all = array_sort(concat(coalesce(prev("cands"), emptyCands), col("__cands")))
+      Seq(col("k"),
+        (col("__delta_ct") + coalesce(prev("total_docs"), lit(0L))).as("total_docs"),
+        // null-SAFE <=> (round-12 ADVICE #4): with plain `=`, a null
+        // h/doc_id makes the predicate NULL and filter() silently DROPS
+        // the element from the calibration set; <=> keeps the keep/dedup
+        // decision total even if an upstream change violates the current
+        // non-null contract
+        slice(filter(all, (x, i) => i + 1 >= size(all) || !(
+          all(i + 1)("h") <=> x("h") && all(i + 1)("doc_id") <=> x("doc_id"))),
+          1, calK).as("cands"))
+    }
   }
 
   /** Current per-α conformal thresholds from the maintained calibration
@@ -105,15 +90,4 @@ object ConformalStream {
           .otherwise(lit(Long.MinValue)))
       .select(col("alpha_pct"), col("n_cal"), col("k_rank"), col("threshold"),
         col("total_docs"))
-
-  /** Drive the maintenance from a streaming scored-docs frame
-    * (doc_id, score). */
-  def run(spark: SparkSession, docs: DataFrame, storePath: String,
-          checkpoint: String, calK: Int = 64): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (delta: DataFrame, epoch: Long) =>
-        applyBatch(spark, delta, storePath, epoch, calK)
-      }
-      .start()
 }

@@ -4,7 +4,6 @@ import graft.io.Io
 import graft.operators.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** STREAMING ENTITY REGISTRY — exactly-once micro-batched maintenance of a
   * fuzzy-identity dimension store: the streaming twin of the oracle-gated
@@ -113,16 +112,6 @@ object EntityRegistry {
       Io.upsertDim(spark, deduped, storePath, "c_custkey", "last_epoch")
     } finally store.unpersist(blocking = false)
   }
-
-  /** Drive the registry from a streaming frame of arriving rows. */
-  def run(spark: SparkSession, arrivals: DataFrame, storePath: String,
-          checkpoint: String): StreamingQuery =
-    arrivals.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (delta: DataFrame, epoch: Long) =>
-        applyBatch(spark, delta, storePath, epoch)
-      }
-      .start()
 
   /** Current registry: one row per key with its canonical entity_id. */
   def readRegistry(spark: SparkSession, storePath: String): DataFrame =

@@ -76,7 +76,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * sampled head row (round-16 ADVICE: upsertDim publishes per bucket,
   * so a head-sampled gate could skip a replay's add and silently lose
   * the unpublished buckets). A replay against a store that partially
-  * absorbed this epoch merges per ROW (MixtureStream.mergeAdditive's
+  * absorbed this epoch merges per ROW (EpochStore.mergeAdditive's
   * rule): rows already at this epoch keep their stored sum, older rows
   * add the recomputed batch sums. A crash between the cells and pool
   * writes leaves cells one epoch ahead; the replay's completeness gate
@@ -353,7 +353,7 @@ object FacilityStream {
               expectedIds.forall(s.map(_._1).toSet)
           }) {
           // stable absorb (possibly a replay over a partially-published
-          // legacy store): merge per ROW — MixtureStream.mergeAdditive's
+          // legacy store): merge per ROW — EpochStore.mergeAdditive's
           // epoch gate (round-16 ADVICE #1). A row already at this epoch
           // keeps its stored sum (it absorbed this batch before the
           // crash); an older row adds the recomputed batch sums.
@@ -497,12 +497,8 @@ object FacilityStream {
           cellsPath: String, checkpoint: String, corpus: () => DataFrame,
           k: Int = 4, pool: Int = 16): StreamingQuery = {
     validateCellBudget(pool, k) // refuse a cell explosion at stream START
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (delta: DataFrame, epoch: Long) =>
-        applyBatch(spark, delta, poolPath, cellsPath, epoch, k, pool,
-          Some(corpus))
-      }
-      .start()
+    EpochStore.run(rows, checkpoint) { (delta, epoch) =>
+      applyBatch(spark, delta, poolPath, cellsPath, epoch, k, pool, Some(corpus))
+    }
   }
 }

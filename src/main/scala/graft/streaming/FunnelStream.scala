@@ -4,7 +4,6 @@ import graft.io.Io
 import graft.operators.Relational
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** STREAMING FUNNEL MAINTENANCE — the streaming twin of q165's day-grain
   * funnel, and a fourth STATE CLASS for the exactly-once maintainers:
@@ -26,9 +25,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * state no longer holds, so the fold's frontier guard DROPS it — the
   * Scd2Stream watermark discipline, drop-not-corrupt (spec-pinned).
   *
-  * Exactly-once is the standard per-key epoch gate over the bucketed
-  * upsert store: replays and partial bucket commits re-apply only keys
-  * whose `last_epoch < epoch`, and re-application is deterministic from
+  * Exactly-once is the standard [[EpochStore]] per-key gate over the
+  * bucketed upsert store: replays and partial bucket commits re-apply only
+  * keys the epoch has not reached, and re-application is deterministic from
   * (stored state, batch) — crash-placement independent. State expiry: a
   * user-day stops changing once the day is out of the ingest horizon;
   * rows older than the retention window can be dropped after folding into
@@ -49,29 +48,14 @@ object FunnelStream {
         .as("__evs"))
       .withColumn("k",
         concat_ws("|", col("user_id"), date_format(col("d"), "yyyy-MM-dd")))
-    val joined =
-      if (!Io.dimStoreHasData(storePath))
-        changes
-          .withColumn("__v", lit(null).cast("long"))
-          .withColumn("__c", lit(null).cast("long"))
-          .withColumn("__p", lit(null).cast("long"))
-          .withColumn("__lt", lit(null).cast("long"))
-          .withColumn("__le", lit(null).cast("long"))
-      else
-        changes.join(
-          Io.readDim(spark, storePath).select(col("k"),
-            col("v").as("__v"), col("c").as("__c"), col("p").as("__p"),
-            col("lt").as("__lt"), col("last_epoch").as("__le")),
-          Seq("k"), "left")
-    val merged = joined
-      .filter(col("__le").isNull || col("__le") < epoch)
-      .withColumn("m", Relational.milestoneFold(col("__evs"),
-        struct(col("__v").as("v"), col("__c").as("c"), col("__p").as("p"),
-          coalesce(col("__lt"), lit(-1L)).as("lt"))))
-      .select(col("k"), col("user_id"), col("d"),
-        col("m.v").as("v"), col("m.c").as("c"), col("m.p").as("p"),
-        col("m.lt").as("lt"), lit(epoch).as("last_epoch"))
-    Io.upsertDim(spark, merged, storePath, "k", "last_epoch")
+    EpochStore.merge(spark, changes, storePath, "k", epoch,
+      "v bigint, c bigint, p bigint, lt bigint") { prev =>
+      val m = Relational.milestoneFold(col("__evs"),
+        struct(prev("v").as("v"), prev("c").as("c"), prev("p").as("p"),
+          coalesce(prev("lt"), lit(-1L)).as("lt")))
+      // inline spreads the folded struct into v, c, p, lt: one fold per row
+      Seq(col("k"), col("user_id"), col("d"), inline(array(m)))
+    }
   }
 
   /** Daily funnel counts from the maintained milestones — the q165 output
@@ -79,14 +63,4 @@ object FunnelStream {
   def readFunnel(spark: SparkSession, storePath: String): DataFrame =
     Relational.funnelCounts(
       Io.readDim(spark, storePath).select("user_id", "d", "v", "c", "p"))
-
-  /** Drive the maintenance from a streaming events frame. */
-  def run(spark: SparkSession, events: DataFrame, storePath: String,
-          checkpoint: String): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (delta: DataFrame, epoch: Long) =>
-        applyBatch(spark, delta, storePath, epoch)
-      }
-      .start()
 }

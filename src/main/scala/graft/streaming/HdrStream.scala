@@ -4,7 +4,6 @@ import graft.io.Io
 import graft.operators.Relational
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** STREAMING QUANTILE MAINTENANCE — the streaming twin of q153's HDR
   * histogram sketch ([[Relational.hdrCells]]), completing the maintained-
@@ -33,10 +32,10 @@ object HdrStream {
     * Idempotent per (cell, epoch). */
   def applyBatch(spark: SparkSession, delta: DataFrame, cellsPath: String,
                  epoch: Long, p: Int = 5): Unit =
-    CellStore.mergeAdditive(spark,
+    EpochStore.mergeAdditive(spark,
       Relational.hdrCells(delta, p)
         .withColumn("cell", concat_ws("|", col("event_type"), col("lo"))),
-      cellsPath, epoch, "ct")
+      cellsPath, "cell", epoch, Seq("ct"))
 
   /** Current per-group quantile envelopes from the maintained cells — the
     * q153 output shape, definitionally equal to the batch operator over
@@ -44,14 +43,4 @@ object HdrStream {
   def readQuantiles(spark: SparkSession, cellsPath: String, p: Int = 5): DataFrame =
     Relational.hdrQuantilesFromCells(
       Io.readDim(spark, cellsPath).select("event_type", "lo", "ct"), p)
-
-  /** Drive the maintenance from a streaming frame with (event_type, value). */
-  def run(spark: SparkSession, valued: DataFrame, cellsPath: String,
-          checkpoint: String, p: Int = 5): StreamingQuery =
-    valued.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (delta: DataFrame, epoch: Long) =>
-        applyBatch(spark, delta, cellsPath, epoch, p)
-      }
-      .start()
 }

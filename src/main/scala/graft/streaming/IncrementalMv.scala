@@ -1,9 +1,8 @@
 package graft.streaming
 
 import graft.io.Io
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** STREAMING incremental materialized-view maintenance — the streaming twin
   * of [[graft.operators.Relational.incrementalStats]] (q115) and the
@@ -17,18 +16,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * rename-aside commit (write amplification batch-proportional, never
   * table-proportional).
   *
-  * Exactly-once across failures WITHOUT sink transactions: each MV row
-  * carries `last_epoch`, the foreachBatch epoch that last contributed to
-  * it. A replayed batch (crash between sink write and checkpoint commit —
-  * Spark re-runs the epoch) finds `last_epoch >= epoch` on the keys it
-  * already touched and drops them, so re-applying is a no-op PER KEY. That
-  * per-key granularity also covers PARTIAL sink commits: upsertDim
-  * publishes bucket-by-bucket, so a crash can leave some buckets updated
-  * and others not — on replay, already-updated keys are skipped while
-  * missed keys still merge. This is the idempotent-merge discipline every
-  * exactly-once aggregation sink at 100 TB reduces to (Delta/Iceberg MERGE
-  * with a txn-id column plays the same trick); the JDBC twin of the same
-  * idea is [[Io.appendIdempotent]]'s epoch table.
+  * Exactly-once across failures WITHOUT sink transactions: the
+  * [[EpochStore]] per-key `last_epoch` gate makes replays and partial
+  * bucket commits no-ops per key. This is the idempotent-merge discipline
+  * every exactly-once aggregation sink at 100 TB reduces to (Delta/Iceberg
+  * MERGE with a txn-id column plays the same trick); the JDBC twin of the
+  * same idea is [[Io.appendIdempotent]]'s epoch table.
   *
   * Holistic measures (exact distinct) don't merge; the mergeable-sketch
   * form DOES — set `distinctCol` and the MV carries a DataSketches HLL
@@ -63,48 +56,22 @@ object IncrementalMv {
                  epoch: Long, distinctCol: Option[String] = None): Unit = {
     val d = deltaAgg(delta, distinctCol).withColumn("k",
       concat_ws("|", col("event_type"), col("event_date").cast("string")))
-    val merged =
-      if (!Io.dimStoreHasData(storePath)) d.withColumn("last_epoch", lit(epoch))
-      else {
-        val s = Io.readDim(spark, storePath)
-        // replay detection: keys whose store row already saw this (or a
-        // later) epoch have this batch's contribution — drop them
-        val fresh = d
-          .join(s.select(col("k"), col("last_epoch").as("__se")), Seq("k"), "left")
-          .filter(col("__se").isNull || col("__se") < epoch)
-          .drop("__se")
-        // store values for TOUCHED keys only — untouched rows are never read
-        // into the merge (upsertDim likewise never opens their buckets)
-        val prevCols = Seq(col("k"), col("ct").as("__pct"),
-          col("sum_cents").as("__psum"), col("max_cents").as("__pmax")) ++
-          distinctCol.map(_ => col("uv_sketch").as("__psk"))
-        val prev = s.join(fresh.select("k"), Seq("k"), "left_semi")
-          .select(prevCols: _*)
+    val stored = "ct bigint, sum_cents bigint, max_cents bigint" +
+      distinctCol.fold("")(_ => ", uv_sketch binary")
+    EpochStore.merge(spark, d, storePath, "k", epoch, stored) { prev =>
+      Seq(col("k"), col("event_type"), col("event_date"),
+        (col("ct") + coalesce(prev("ct"), lit(0L))).as("ct"),
+        (col("sum_cents") + coalesce(prev("sum_cents"), lit(0L))).as("sum_cents"),
+        greatest(col("max_cents"), coalesce(prev("max_cents"), col("max_cents")))
+          .as("max_cents")) ++
         // a first-seen key has no prior sketch: hll_union rejects null, so
         // branch instead of coalescing into it
-        val sketchMerge: Seq[Column] = distinctCol.map(_ =>
-          when(col("__psk").isNull, col("uv_sketch"))
-            .otherwise(hll_union(col("uv_sketch"), col("__psk")))
-            .as("uv_sketch")).toSeq
-        fresh.join(prev, Seq("k"), "left")
-          .select(Seq(col("k"), col("event_type"), col("event_date"),
-            (col("ct") + coalesce(col("__pct"), lit(0L))).as("ct"),
-            (col("sum_cents") + coalesce(col("__psum"), lit(0L))).as("sum_cents"),
-            greatest(col("max_cents"), coalesce(col("__pmax"), col("max_cents")))
-              .as("max_cents")) ++ sketchMerge :+ lit(epoch).as("last_epoch"): _*)
-      }
-    Io.upsertDim(spark, merged, storePath, "k", "last_epoch")
+        distinctCol.map(_ =>
+          when(prev("uv_sketch").isNull, col("uv_sketch"))
+            .otherwise(hll_union(col("uv_sketch"), prev("uv_sketch")))
+            .as("uv_sketch"))
+    }
   }
-
-  /** Drive the maintenance from a streaming events frame. */
-  def run(spark: SparkSession, events: DataFrame, storePath: String,
-          checkpoint: String, distinctCol: Option[String] = None): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (delta: DataFrame, epoch: Long) =>
-        applyBatch(spark, delta, storePath, epoch, distinctCol)
-      }
-      .start()
 
   /** Read the current MV (drops the layout/epoch bookkeeping columns; a
     * sketch measure, if maintained, surfaces as its ESTIMATE — the binary

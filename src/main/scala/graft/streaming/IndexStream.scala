@@ -4,7 +4,6 @@ import graft.io.Io
 import graft.operators.TextOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** STREAMING INDEX MAINTENANCE — the streaming twin of q171's positional
   * inverted index: newly ingested documents fold into the (term, chunk)
@@ -19,8 +18,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * are additive counts, and the postings string is the doc-ordered merge of
   * the two entry sets. Merge = split '|' → union → numeric sort on the
   * entry's doc prefix → re-join; df/cf add. The per-cell `last_epoch` gate
-  * (the CellStore discipline, with a non-additive value column handled by
-  * an idempotent set-union instead of addition) makes replays and partial
+  * (the [[EpochStore]] discipline, with a non-additive value column handled
+  * by an idempotent set-union instead of addition) makes replays and partial
   * bucket commits fill-once: a replayed batch's entries are already present
   * and the epoch gate skips the cell entirely, so nothing double-counts.
   *
@@ -35,27 +34,15 @@ object IndexStream {
                  epoch: Long, chunkDocs: Int = 256): Unit = {
     val d = TextOps.positionalIndexFrom(delta, chunkDocs)
       .withColumn("cell", concat_ws("|~|", col("term"), col("chunk")))
-    val merged =
-      if (!Io.dimStoreHasData(path)) d.withColumn("last_epoch", lit(epoch))
-      else {
-        val s = Io.readDim(spark, path)
-        val fresh = d
-          .join(s.select(col("cell"), col("last_epoch").as("__se")), Seq("cell"), "left")
-          .filter(col("__se").isNull || col("__se") < epoch)
-          .drop("__se")
-        val prev = s.join(fresh.select("cell"), Seq("cell"), "left_semi")
-          .select(col("cell"), col("df").as("__pdf"), col("cf").as("__pcf"),
-            col("postings").as("__pp"))
-        fresh.join(prev, Seq("cell"), "left")
-          .withColumn("df", col("df") + coalesce(col("__pdf"), lit(0L)))
-          .withColumn("cf", col("cf") + coalesce(col("__pcf"), lit(0L)))
-          .withColumn("postings",
-            when(col("__pp").isNull, col("postings"))
-              .otherwise(mergePostings(col("__pp"), col("postings"))))
-          .drop("__pdf", "__pcf", "__pp")
-          .withColumn("last_epoch", lit(epoch))
-      }
-    Io.upsertDim(spark, merged, path, "cell", "last_epoch")
+    EpochStore.merge(spark, d, path, "cell", epoch,
+      "df bigint, cf bigint, postings string") { prev =>
+      Seq(col("term"), col("chunk"),
+        (col("df") + coalesce(prev("df"), lit(0L))).as("df"),
+        (col("cf") + coalesce(prev("cf"), lit(0L))).as("cf"),
+        when(prev("postings").isNull, col("postings"))
+          .otherwise(mergePostings(prev("postings"), col("postings"))).as("postings"),
+        col("cell"))
+    }
   }
 
   /** Doc-ordered merge of two '|'-joined postings strings: split, union,
@@ -74,14 +61,4 @@ object IndexStream {
   /** The q171 output shape from the maintained store. */
   def readIndex(spark: SparkSession, path: String): DataFrame =
     Io.readDim(spark, path).select("term", "chunk", "df", "cf", "postings")
-
-  /** Drive the maintenance from a streaming frame with (doc_id, text). */
-  def run(spark: SparkSession, docs: DataFrame, path: String,
-          checkpoint: String, chunkDocs: Int = 256): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (delta: DataFrame, epoch: Long) =>
-        applyBatch(spark, delta, path, epoch, chunkDocs)
-      }
-      .start()
 }

@@ -4,7 +4,6 @@ import graft.io.Io
 import graft.operators.Similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** STREAMING k-CENTER CORESET MAINTENANCE — the streaming twin of q199 via
   * a COMPOSABLE CORESET [Indyk et al. PODS'14; the two-level shape of
@@ -126,16 +125,4 @@ object KCenterStream {
     Similarity.kcenterSelect(
       Io.readDim(spark, storePath).select("vec_id", "q"), k)
   }
-
-  /** Drive the maintenance from a streaming (vec_id, embedding) frame —
-    * each batch runs the full maintenance step including the cap check. */
-  def run(spark: SparkSession, rows: DataFrame, storePath: String,
-          checkpoint: String, k: Int = 8, capRows: Long = 1L << 16,
-          keep: Int = 64): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (delta: DataFrame, epoch: Long) =>
-        applyBatch(spark, delta, storePath, epoch, k, capRows, keep)
-      }
-      .start()
 }

@@ -4,12 +4,11 @@ import graft.io.Io
 import graft.operators.TextOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** STREAMING LM MAINTENANCE — the streaming twin of q174's Kneser–Ney
   * training stage: the LM's ONLY stored state is the bigram count table
   * (gram → c12), and counts are ADDITIVE across training batches, so the
-  * maintainer is the shared [[CellStore]] epoch-gated merge with the gram
+  * maintainer is the shared [[EpochStore]] epoch-gated merge with the gram
   * as the cell key. Everything else KN needs — context marginals c1 and
   * N₁₊(w1,·), continuation counts N₁₊(·,w2), the distinct-bigram total
   * ctot — is a vocabulary-bounded DERIVATION of that table, recomputed at
@@ -35,10 +34,10 @@ object LmStream {
     * count store. Idempotent per (gram, epoch). */
   def applyBatch(spark: SparkSession, trainDelta: DataFrame, cellsPath: String,
                  epoch: Long): Unit =
-    CellStore.mergeAdditive(spark,
+    EpochStore.mergeAdditive(spark,
       TextOps.knGramCounts(trainDelta)
         .select(col("gram").as("cell"), col("gram"), col("c12")),
-      cellsPath, epoch, Seq("c12"))
+      cellsPath, "cell", epoch, Seq("c12"))
 
   /** The maintained (gram, c12) corpus frame — batch-equal to
     * [[TextOps.knGramCounts]] over every training doc absorbed. */
@@ -49,15 +48,4 @@ object LmStream {
     * shape, equal to the batch operator trained on everything absorbed. */
   def scoreAll(spark: SparkSession, cellsPath: String, d: DataFrame): DataFrame =
     TextOps.knScoreWith(d, readCorpus(spark, cellsPath))
-
-  /** Drive the maintenance from a streaming frame of training docs
-    * (doc_id, text). */
-  def run(spark: SparkSession, trainDocs: DataFrame, cellsPath: String,
-          checkpoint: String): StreamingQuery =
-    trainDocs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (delta: DataFrame, epoch: Long) =>
-        applyBatch(spark, delta, cellsPath, epoch)
-      }
-      .start()
 }

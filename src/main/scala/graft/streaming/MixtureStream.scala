@@ -5,7 +5,6 @@ import graft.functions.TextFns
 import graft.operators.TextOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** STREAMING MIXTURE-DECISION MAINTENANCE — the streaming twin of
   * q181/q182 (VERDICT r12 #5): the mixture report's per-source inputs are
@@ -14,7 +13,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * Two stores, two store classes:
   *  - **avail** (q182's token supply) is SCALAR-ADDITIVE: one row per
-  *    source under the CellStore per-key epoch gate (same discipline as
+  *    source under the [[EpochStore]] per-key epoch gate (same discipline as
   *    the count/sum maintainers — a replayed epoch is a no-op).
   *  - **shingle cells** (q181's coverage sets AND q182's weight) are
   *    FIRST-SEEN (source, 3-shingle) rows — the LM-count-table store
@@ -37,7 +36,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * Rounds 13-14 grew this object into the home of the whole
   * DECISION-REPORT maintenance family: the same two store classes
-  * (additive cells under [[mergeAdditive]]'s per-key epoch gate;
+  * (additive cells under [[EpochStore.mergeAdditive]]'s per-key epoch gate;
   * first-seen/set-idempotent rows) now also feed q194's KS matrix
   * (score histogram), q195's ablation (scalar stats + the shared shingle
   * cells), q191's Chao1 (term count table) and q192's packing capacity
@@ -46,45 +45,15 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * definitional per store. */
 object MixtureStream {
 
-  /** Shared additive-CellStore merge (round-14 review: this gate existed
-    * in three copy-pasted variants): left-join the delta aggregate against
-    * the store on `pk`, drop rows whose cell already absorbed this epoch
-    * (replay no-op, per key), add each additive column onto its stored
-    * value, upsert. `adds` = (store column, delta column) pairs; `carry` =
-    * non-additive columns re-emitted verbatim (composite-key parts). */
-  private def mergeAdditive(spark: SparkSession, fresh: DataFrame,
-                            store: String, pk: String,
-                            adds: Seq[(String, String)], carry: Seq[String],
-                            epoch: Long): Unit = {
-    val joined =
-      if (!Io.dimStoreHasData(store))
-        adds.foldLeft(fresh) { case (d, (sc, _)) =>
-          d.withColumn(s"__p_$sc", lit(0L)) }
-          .withColumn("__le", lit(null).cast("long"))
-      else
-        fresh.join(
-          Io.readDim(spark, store).select(
-            col(pk) +: (adds.map { case (sc, _) => col(sc).as(s"__p_$sc") } :+
-              col("last_epoch").as("__le")): _*),
-          Seq(pk), "left")
-    val merged = joined
-      .filter(col("__le").isNull || col("__le") < epoch)
-      .select(col(pk) +: (carry.map(col) ++
-        adds.map { case (sc, dc) =>
-          (col(dc) + coalesce(col(s"__p_$sc"), lit(0L))).as(sc) } :+
-        lit(epoch).as("last_epoch")): _*)
-    Io.upsertDim(spark, merged, store, pk, "last_epoch")
-  }
-
   /** Merge one micro-batch of (source, text) document rows into the two
     * stores. Idempotent per (source, epoch) on avail; unconditionally
     * idempotent on the shingle cells. */
   def applyBatch(spark: SparkSession, delta: DataFrame, availStore: String,
                  shingleStore: String, epoch: Long): Unit = {
-    mergeAdditive(spark,
+    EpochStore.mergeAdditive(spark,
       delta.groupBy("source")
-        .agg(sum(size(TextFns.tokensCol(col("text"))).cast("long")).as("__da")),
-      availStore, "source", Seq("avail" -> "__da"), Nil, epoch)
+        .agg(sum(size(TextFns.tokensCol(col("text"))).cast("long")).as("avail")),
+      availStore, "source", epoch, Seq("avail"))
 
     val cells = delta
       .select(col("source"),
@@ -128,15 +97,14 @@ object MixtureStream {
   def applyAblationBatch(spark: SparkSession, delta: DataFrame,
                          statsStore: String, epoch: Long): Unit = {
     val toks = TextFns.tokensCol(col("text"))
-    mergeAdditive(spark,
+    EpochStore.mergeAdditive(spark,
       delta
         .select(col("source"), size(toks).cast("long").as("__dt"),
           TextFns.classifierScoreUdf(toks).as("__ds"))
         .groupBy("source")
-        .agg(count(lit(1)).as("__dn"), sum(col("__dt")).as("__dtok"),
-          sum(col("__ds")).as("__dsc")),
-      statsStore, "source",
-      Seq("n_docs" -> "__dn", "tokens" -> "__dtok", "s" -> "__dsc"), Nil, epoch)
+        .agg(count(lit(1)).as("n_docs"), sum(col("__dt")).as("tokens"),
+          sum(col("__ds")).as("s")),
+      statsStore, "source", epoch, Seq("n_docs", "tokens", "s"))
   }
 
   /** Current q195 ablation report over everything absorbed: the scalar
@@ -161,14 +129,14 @@ object MixtureStream {
     * the absorbed doc count even degenerate. */
   def applyKsBatch(spark: SparkSession, delta: DataFrame,
                    histStore: String, epoch: Long): Unit =
-    mergeAdditive(spark,
+    EpochStore.mergeAdditive(spark,
       delta
         .select(col("source"),
           TextFns.classifierScoreUdf(TextFns.tokensCol(col("text"))).as("score"))
-        .groupBy("source", "score").agg(count(lit(1)).as("__dc"))
+        .groupBy("source", "score").agg(count(lit(1)).as("ct"))
         // composite (source, score) key; U+0001 cannot occur in a source id
         .withColumn("k", concat_ws("\u0001", col("source"), col("score"))),
-      histStore, "k", Seq("ct" -> "__dc"), Seq("source", "score"), epoch)
+      histStore, "k", epoch, Seq("ct"))
 
   /** Current q194 KS matrix over everything absorbed — the batch walk fed
     * the maintained score histogram; bounds and bins recomputed at read
@@ -187,13 +155,13 @@ object MixtureStream {
     * batch stays definitional. */
   def applyDoremiBatch(spark: SparkSession, delta: DataFrame,
                        tokStore: String, epoch: Long): Unit =
-    mergeAdditive(spark,
+    EpochStore.mergeAdditive(spark,
       delta
         .select(col("source"), explode(TextFns.tokensCol(col("text"))).as("tok"))
-        .groupBy("source", "tok").agg(count(lit(1)).as("__dc"))
+        .groupBy("source", "tok").agg(count(lit(1)).as("ct"))
         // composite (source, tok) key; U+0001 cannot occur in either side
         .withColumn("k", concat_ws("\u0001", col("source"), col("tok"))),
-      tokStore, "k", Seq("ct" -> "__dc"), Seq("source", "tok"), epoch)
+      tokStore, "k", epoch, Seq("ct"))
 
   /** Current q203 mixture weights over everything absorbed — the batch
     * MWU walk ([[TextOps.doremiFrom]]) fed the maintained counts: "what
@@ -214,7 +182,7 @@ object MixtureStream {
     * late batches accumulate its count. */
   def applyPmiBatch(spark: SparkSession, delta: DataFrame,
                     pmiStore: String, epoch: Long): Unit =
-    mergeAdditive(spark,
+    EpochStore.mergeAdditive(spark,
       delta
         .select(TextFns.tokensCol(col("text")).as("toks"))
         .select(explode(concat(
@@ -222,10 +190,10 @@ object MixtureStream {
           transform(TextFns.shinglesCol(col("toks"), 2),
             s => struct(lit("b").as("tag"), s.as("g"))))).as("x"))
         .select(col("x.tag").as("tag"), col("x.g").as("g"))
-        .groupBy("tag", "g").agg(count(lit(1)).as("__dc"))
+        .groupBy("tag", "g").agg(count(lit(1)).as("c"))
         // composite (tag, gram) key; U+0001 cannot occur in either side
         .withColumn("k", concat_ws("\u0001", col("tag"), col("g"))),
-      pmiStore, "k", Seq("c" -> "__dc"), Seq("tag", "g"), epoch)
+      pmiStore, "k", epoch, Seq("c"))
 
   /** Current q206 collocation dictionary over everything absorbed — the
     * batch PMI ranking ([[TextOps.pmiFrom]]) fed the maintained tagged
@@ -245,14 +213,14 @@ object MixtureStream {
     * crawling deeper" re-answered continuously as ingest absorbs. */
   def applyChao1Batch(spark: SparkSession, delta: DataFrame,
                       termStore: String, epoch: Long): Unit =
-    mergeAdditive(spark,
+    EpochStore.mergeAdditive(spark,
       delta
         .select(col("source"), explode(TextFns.gramCountsUdf(3)(col("text"))))
         .select(col("source"), col("key").as("term"),
           col("value").cast("long").as("tf"))
-        .groupBy("source", "term").agg(sum(col("tf")).as("__dct"))
+        .groupBy("source", "term").agg(sum(col("tf")).as("ct"))
         .withColumn("k", concat_ws("\u0001", col("source"), col("term"))),
-      termStore, "k", Seq("ct" -> "__dct"), Seq("source", "term"), epoch)
+      termStore, "k", epoch, Seq("ct"))
 
   /** Current q191 estimate over everything absorbed — the batch estimator
     * fed the maintained count table. */
@@ -280,10 +248,10 @@ object MixtureStream {
     * absorbs, no corpus re-scan. */
   def applyPackingBatch(spark: SparkSession, delta: DataFrame,
                         lenStore: String, epoch: Long): Unit =
-    mergeAdditive(spark,
+    EpochStore.mergeAdditive(spark,
       delta.select(size(TextFns.tokensCol(col("text"))).cast("long").as("len"))
-        .groupBy("len").agg(count(lit(1)).as("__dn")),
-      lenStore, "len", Seq("n" -> "__dn"), Nil, epoch)
+        .groupBy("len").agg(count(lit(1)).as("n")),
+      lenStore, "len", epoch, Seq("n"))
 
   /** Current q192 capacity table over everything absorbed. */
   def readPacking(spark: SparkSession, lenStore: String,
@@ -298,9 +266,8 @@ object MixtureStream {
     * re-answered continuously. */
   def applyKappaBatch(spark: SparkSession, delta: DataFrame,
                       confStore: String, epoch: Long): Unit =
-    mergeAdditive(spark, TextOps.kappaConf(delta), confStore, "source",
-      Seq("n11" -> "n11", "n10" -> "n10", "n01" -> "n01", "n00" -> "n00"),
-      Nil, epoch)
+    EpochStore.mergeAdditive(spark, TextOps.kappaConf(delta), confStore, "source",
+      epoch, Seq("n11", "n10", "n01", "n00"))
 
   /** Current q189 agreement report over everything absorbed. */
   def readKappa(spark: SparkSession, confStore: String): DataFrame =
@@ -315,8 +282,8 @@ object MixtureStream {
     * this filter, FDR-controlled" re-answered continuously. */
   def applyBhBatch(spark: SparkSession, delta: DataFrame,
                    passStore: String, epoch: Long): Unit =
-    mergeAdditive(spark, TextOps.bhCounts(delta), passStore, "source",
-      Seq("n" -> "n", "passes" -> "passes"), Nil, epoch)
+    EpochStore.mergeAdditive(spark, TextOps.bhCounts(delta), passStore, "source",
+      epoch, Seq("n", "passes"))
 
   /** Current q201 FDR report over everything absorbed. */
   def readBhFdr(spark: SparkSession, passStore: String,
@@ -344,11 +311,11 @@ object MixtureStream {
                         tokStore: String, cellStore: String, epoch: Long,
                         slices: Int = 8): Unit = {
     val d = delta.withColumn("slice", TextOps.noveltySlice(slices))
-    mergeAdditive(spark,
+    EpochStore.mergeAdditive(spark,
       d.groupBy("source", "slice")
-        .agg(sum(size(TextFns.tokensCol(col("text"))).cast("long")).as("__dt"))
+        .agg(sum(size(TextFns.tokensCol(col("text"))).cast("long")).as("slice_tokens"))
         .withColumn("k", concat_ws("\u0001", col("source"), col("slice"))),
-      tokStore, "k", Seq("slice_tokens" -> "__dt"), Seq("source", "slice"), epoch)
+      tokStore, "k", epoch, Seq("slice_tokens"))
     val cells = d.select(col("source"), col("slice"),
         explode(TextFns.distinctShinglesUdf(3)(col("text"))).as("sh"))
       .distinct()
@@ -363,14 +330,4 @@ object MixtureStream {
     TextOps.noveltyFrom(
       Io.readDim(spark, tokStore).select("source", "slice", "slice_tokens"),
       Io.readDim(spark, cellStore).select("source", "slice", "sh"))
-
-  /** Drive the maintenance from a streaming (source, text) frame. */
-  def run(spark: SparkSession, rows: DataFrame, availStore: String,
-          shingleStore: String, checkpoint: String): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (delta: DataFrame, epoch: Long) =>
-        applyBatch(spark, delta, availStore, shingleStore, epoch)
-      }
-      .start()
 }

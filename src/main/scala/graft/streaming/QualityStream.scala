@@ -3,7 +3,6 @@ package graft.streaming
 import graft.io.Io
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** STREAMING INCREMENTAL DATA-QUALITY METRICS — the streaming twin of the
   * oracle-gated [[graft.operators.Quality.qualityChecks]] (q131), and the
@@ -29,9 +28,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * need the parent keyset, not a per-table state; the q107 bloom pre-pass
   * is the streaming-shaped triage).
   *
-  * Exactly-once: the single state row carries `last_epoch`; a replayed
-  * epoch is dropped before aggregating (same gate as [[IncrementalMv]] —
-  * and one row cannot partially commit). */
+  * Exactly-once: the single state row carries `last_epoch`, and the
+  * [[EpochStore]] per-key gate on `t` drops a replayed epoch (one row
+  * cannot partially commit). */
 object QualityStream {
 
   /** Algebraic quality state of one micro-batch of `orders` rows. */
@@ -48,27 +47,16 @@ object QualityStream {
   /** Merge one micro-batch into the state store. Idempotent per epoch. */
   def applyBatch(spark: SparkSession, delta: DataFrame, storePath: String,
                  epoch: Long): Unit = {
-    val d = deltaAgg(delta).withColumn("t", lit("orders"))
-    val merged =
-      if (!Io.dimStoreHasData(storePath)) d.withColumn("last_epoch", lit(epoch))
-      else {
-        val s = Io.readDim(spark, storePath)
-        if (!s.filter(col("last_epoch") >= epoch).isEmpty) return // replay
-        val prev = s.select(col("t"), col("size").as("__ps"),
-          col("nn_custkey").as("__pn"), col("ok_status").as("__po"),
-          col("pos_price").as("__pp"), col("min_price").as("__pm"),
-          col("key_sketch").as("__pk"))
-        d.join(prev, Seq("t"))
-          .select(col("t"),
-            (col("size") + col("__ps")).as("size"),
-            (col("nn_custkey") + col("__pn")).as("nn_custkey"),
-            (col("ok_status") + col("__po")).as("ok_status"),
-            (col("pos_price") + col("__pp")).as("pos_price"),
-            least(col("min_price"), col("__pm")).as("min_price"),
-            hll_union(col("key_sketch"), col("__pk")).as("key_sketch"),
-            lit(epoch).as("last_epoch"))
-      }
-    Io.upsertDim(spark, merged, storePath, "t", "last_epoch")
+    val d = deltaAgg(delta)
+    // the state columns are typed as the batch's own aggregate
+    EpochStore.merge(spark, d.withColumn("t", lit("orders")), storePath, "t", epoch,
+      d.schema.toDDL) { prev =>
+      def add(c: String) = (col(c) + coalesce(prev(c), lit(0L))).as(c)
+      Seq(col("t"), add("size"), add("nn_custkey"), add("ok_status"), add("pos_price"),
+        least(col("min_price"), prev("min_price")).as("min_price"),
+        when(prev("key_sketch").isNull, col("key_sketch"))
+          .otherwise(hll_union(col("key_sketch"), prev("key_sketch"))).as("key_sketch"))
+    }
   }
 
   /** The q131-shaped constraint report from the maintained state — read
@@ -94,14 +82,4 @@ object QualityStream {
         col("key_est") / col("size") >= 1.0 - tol))
       .reduce(_ unionByName _)
   }
-
-  /** Drive the maintenance from a streaming orders frame. */
-  def run(spark: SparkSession, orders: DataFrame, storePath: String,
-          checkpoint: String): StreamingQuery =
-    orders.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (delta: DataFrame, epoch: Long) =>
-        applyBatch(spark, delta, storePath, epoch)
-      }
-      .start()
 }

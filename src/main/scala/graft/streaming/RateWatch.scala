@@ -3,7 +3,6 @@ package graft.streaming
 import graft.io.Io
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** STREAMING INGEST-RATE MONITORING — the streaming twin of the
   * oracle-gated anomaly detector (q138): maintain per-(event_type, hour)
@@ -35,26 +34,11 @@ object RateWatch {
 
   /** Merge one micro-batch into the counts store. Idempotent per (key, epoch). */
   def applyBatch(spark: SparkSession, delta: DataFrame, storePath: String,
-                 epoch: Long): Unit = {
-    val d = deltaAgg(delta).withColumn("k",
-      concat_ws("|", col("event_type"), col("h").cast("string")))
-    val merged =
-      if (!Io.dimStoreHasData(storePath)) d.withColumn("last_epoch", lit(epoch))
-      else {
-        val s = Io.readDim(spark, storePath)
-        val fresh = d
-          .join(s.select(col("k"), col("last_epoch").as("__se")), Seq("k"), "left")
-          .filter(col("__se").isNull || col("__se") < epoch)
-          .drop("__se")
-        val prev = s.join(fresh.select("k"), Seq("k"), "left_semi")
-          .select(col("k"), col("ct").as("__pct"))
-        fresh.join(prev, Seq("k"), "left")
-          .select(col("k"), col("event_type"), col("h"),
-            (col("ct") + coalesce(col("__pct"), lit(0L))).as("ct"),
-            lit(epoch).as("last_epoch"))
-      }
-    Io.upsertDim(spark, merged, storePath, "k", "last_epoch")
-  }
+                 epoch: Long): Unit =
+    EpochStore.mergeAdditive(spark,
+      deltaAgg(delta).withColumn("k",
+        concat_ws("|", col("event_type"), col("h").cast("string"))),
+      storePath, "k", epoch, Seq("ct"))
 
   /** The maintained counts as the dense zero-filled (type × hour) grid. */
   def readGrid(spark: SparkSession, storePath: String): DataFrame = {
@@ -74,14 +58,4 @@ object RateWatch {
   def readAnomalies(spark: SparkSession, storePath: String,
                     win: Int = 24): DataFrame =
     graft.operators.Relational.anomalyZscoreFrom(readGrid(spark, storePath), win)
-
-  /** Drive the maintenance from a streaming events frame. */
-  def run(spark: SparkSession, events: DataFrame, storePath: String,
-          checkpoint: String): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (delta: DataFrame, epoch: Long) =>
-        applyBatch(spark, delta, storePath, epoch)
-      }
-      .start()
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.io.Io
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** STREAMING QUOTA-SAMPLE MAINTENANCE — the streaming twin of q164's
   * deterministic corpus balancing, and the set-semantics member of the
@@ -21,7 +20,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * it makes recovery uniform across the maintainer family and skips the
   * rewrite work on replayed keys. Stratum counts ride along additively —
   * THOSE are not idempotent, so the gate is load-bearing for the count
-  * column exactly as in [[CellStore]].
+  * column exactly as in [[EpochStore.mergeAdditive]].
   *
   * State: one row per stratum, k candidates + a count — control-plane
   * sized regardless of absorbed volume. */
@@ -49,26 +48,14 @@ object SampleStream {
         "transform(top, s -> named_struct('h', s.p, 'doc_id', s.id))")
         .cast(candType))
       .select(col("lang"), col("__delta_ct"), col("__cands"))
-    val joined =
-      if (!Io.dimStoreHasData(storePath))
-        fresh.withColumn("__sc", emptyCands)
-          .withColumn("__pc", lit(0L))
-          .withColumn("__le", lit(null).cast("long"))
-      else
-        fresh.join(
-          Io.readDim(spark, storePath).select(col("lang"),
-            col("cands").as("__sc"), col("stratum_docs").as("__pc"),
-            col("last_epoch").as("__le")),
-          Seq("lang"), "left")
-    val merged = joined
-      .filter(col("__le").isNull || col("__le") < epoch)
-      .select(col("lang"),
-        (col("__delta_ct") + coalesce(col("__pc"), lit(0L))).as("stratum_docs"),
+    EpochStore.merge(spark, fresh, storePath, "lang", epoch,
+      s"stratum_docs bigint, cands $candType") { prev =>
+      Seq(col("lang"),
+        (col("__delta_ct") + coalesce(prev("stratum_docs"), lit(0L))).as("stratum_docs"),
         slice(array_sort(array_distinct(
-          concat(coalesce(col("__sc"), emptyCands), col("__cands")))),
-          1, cap).as("cands"),
-        lit(epoch).as("last_epoch"))
-    Io.upsertDim(spark, merged, storePath, "lang", "last_epoch")
+          concat(coalesce(prev("cands"), emptyCands), col("__cands")))),
+          1, cap).as("cands"))
+    }
   }
 
   /** The maintained sample in the q164 output shape — equal to the batch
@@ -79,14 +66,4 @@ object SampleStream {
       .select(col("lang"), col("stratum_docs"),
         (col("pos") + 1).cast("int").as("r"),
         col("col.doc_id").as("doc_id"), col("col.h").as("h"))
-
-  /** Drive the maintenance from a streaming docs frame (doc_id, lang). */
-  def run(spark: SparkSession, docs: DataFrame, storePath: String,
-          checkpoint: String, cap: Int = 64): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (delta: DataFrame, epoch: Long) =>
-        applyBatch(spark, delta, storePath, epoch, cap)
-      }
-      .start()
 }

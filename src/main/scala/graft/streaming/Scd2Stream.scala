@@ -3,7 +3,6 @@ package graft.streaming
 import graft.io.Io
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** STREAMING SCD Type-2 dimension maintenance — the streaming twin of the
   * oracle-gated [[graft.operators.Relational.scd2History]] (q119), and the
@@ -21,7 +20,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * would then either drop the missing tail or double-append. With the
   * whole history in one row, every user's update is ATOMIC under
   * [[Io.upsertDim]]'s per-bucket rename-aside commit, and the same
-  * `last_epoch >= epoch` drop that protects [[IncrementalMv]] covers
+  * [[EpochStore]] per-key gate that protects [[IncrementalMv]] covers
   * partial commits here too. The cost is bounded: an SCD2 history holds
   * CHANGES only (noisy re-emissions collapse below), and a dim whose key
   * genuinely changes state unboundedly is mis-modeled as SCD2 anyway —
@@ -37,6 +36,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * exact late repair would need the full uncompacted log.
   */
 object Scd2Stream {
+
+  private val historyType =
+    "array<struct<state:string,valid_from:timestamp,valid_to:timestamp,version:int>>"
 
   /** Merge one micro-batch of the change log (user_id, state, event_time,
     * event_id) into the history store. Idempotent per (user, epoch). */
@@ -54,19 +56,6 @@ object Scd2Stream {
       .groupBy("user_id")
       .agg(sort_array(collect_list(struct(
         col("event_time"), col("event_id"), col("state")))).as("__changes"))
-    val joined =
-      if (!Io.dimStoreHasData(storePath))
-        changes.withColumn("__history", lit(null)
-          .cast("array<struct<state:string,valid_from:timestamp," +
-            "valid_to:timestamp,version:int>>"))
-          .withColumn("__le", lit(null).cast("long"))
-      else {
-        val s = Io.readDim(spark, storePath)
-        changes.join(
-          s.select(col("user_id"), col("history").as("__history"),
-            col("last_epoch").as("__le")),
-          Seq("user_id"), "left")
-      }
     // per-user epoch gate (replay / partial-commit recovery), then the fold:
     // append each change unless it repeats the current open state; a real
     // change closes the open interval at the change's timestamp.
@@ -82,14 +71,12 @@ object Scd2Stream {
     // contract every event-time window in streaming/ runs under), and the
     // guard turns what leaks past it from silent corruption into a
     // dropped-late-row, the standard late-data semantics.
-    val merged = joined
-      .filter(col("__le").isNull || col("__le") < epoch)
-      .select(col("user_id"),
+    EpochStore.merge(spark, changes, storePath, "user_id", epoch,
+      s"history $historyType") { prev =>
+      Seq(col("user_id"),
         aggregate(
           col("__changes"),
-          coalesce(col("__history"),
-            expr("array()").cast("array<struct<state:string," +
-              "valid_from:timestamp,valid_to:timestamp,version:int>>")),
+          coalesce(prev("history"), expr("array()").cast(historyType)),
           (acc, c) => {
             val last = element_at(acc, -1)
             when(size(acc) > 0 &&
@@ -102,9 +89,7 @@ object Scd2Stream {
                   last.getField("valid_from").as("valid_from"),
                   c.getField("event_time").as("valid_to"),
                   last.getField("version").as("version"))))
-                  .otherwise(expr("array()").cast(
-                    "array<struct<state:string,valid_from:timestamp," +
-                      "valid_to:timestamp,version:int>>")),
+                  .otherwise(expr("array()").cast(historyType)),
                 array(struct(
                   c.getField("state").as("state"),
                   c.getField("event_time").as("valid_from"),
@@ -114,20 +99,9 @@ object Scd2Stream {
                   (when(size(acc) > 0, last.getField("version"))
                     .otherwise(lit(0)) + 1).as("version")))))
           }
-        ).as("history"),
-        lit(epoch).as("last_epoch"))
-    Io.upsertDim(spark, merged, storePath, "user_id", "last_epoch")
+        ).as("history"))
+    }
   }
-
-  /** Drive the maintenance from a streaming change-log frame. */
-  def run(spark: SparkSession, changeLog: DataFrame, storePath: String,
-          checkpoint: String): StreamingQuery =
-    changeLog.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (delta: DataFrame, epoch: Long) =>
-        applyBatch(spark, delta, storePath, epoch)
-      }
-      .start()
 
   /** Current history in the q119 interval shape: one row per version,
     * open intervals closed with the 9999-12-31 sentinel. */

@@ -169,195 +169,6 @@ object Stateful {
 
   case class BounceState(pending: LogEvent)
 
-  // ---------------- transformWithState ports (state API v2) ----------------
-
-  /** [[repairIsNew]] on the arbitrary-state API v2 (`transformWithState`,
-    * Spark 4's successor to flatMapGroupsWithState — typed state handles, the
-    * closest analog to the reference's Flink `ValueState` at
-    * BaseLogApp.java:156-204). Requires the RocksDB state store provider.
-    *
-    * Round-1 note: this deadlocked in this container during RocksDB checkpoint
-    * upload inside ChecksumCheckpointFileManager. Round 2: disabling the
-    * checkpoint-file checksums (`spark.sql.streaming.checkpoint.fileChecksum
-    * .enabled=false`, verified by StatefulSpec) avoids that path; equivalence
-    * with [[repairIsNew]] is spec-gated cross-batch.
-    */
-  class RepairIsNewProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, LogEvent, LogEvent] {
-    import org.apache.spark.sql.streaming.{TimerValues, TTLConfig, ValueState}
-
-    @transient private var firstDay: ValueState[String] = _
-
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      firstDay = getHandle.getValueState[String](
-        "firstDay", org.apache.spark.sql.Encoders.STRING, TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[LogEvent],
-                                 timerValues: TimerValues): Iterator[LogEvent] = {
-      val sorted = rows.toSeq.sortBy(e => (e.ts, e.page_id))
-      sorted.map { e =>
-        if (e.is_new != "1") e
-        else if (!firstDay.exists()) { firstDay.update(dayOf(e.ts)); e }
-        else if (firstDay.get() != dayOf(e.ts)) e.copy(is_new = "0")
-        else e
-      }.iterator
-    }
-  }
-
-  /** [[repairIsNew]] via transformWithState — semantics-identical twin, gated
-    * against the flatMapGroupsWithState version in StatefulSpec. */
-  def repairIsNewTws(events: Dataset[LogEvent]): Dataset[LogEvent] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.mid)
-      .transformWithState(new RepairIsNewProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
-  }
-
-  /** [[repairIsNewRaw]] on state API v2 — the tws twin of the FULL-row repair
-    * [[Apps.baseLog]] runs before the 3-way split (the reference's operator
-    * order). Same only-is_new=1-touches-state machine as the LogEvent twin. */
-  class RepairIsNewRawProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, RawLog, RawLog] {
-    import org.apache.spark.sql.streaming.{TimerValues, TTLConfig, ValueState}
-
-    @transient private var firstDay: ValueState[String] = _
-
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      firstDay = getHandle.getValueState[String](
-        "firstDay", org.apache.spark.sql.Encoders.STRING, TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[RawLog],
-                                 timerValues: TimerValues): Iterator[RawLog] = {
-      val sorted = rows.toSeq.sortBy(e => (e.ts, e.page.flatMap(p => Option(p.page_id))))
-      sorted.map { e =>
-        if (e.common.is_new != "1") e
-        else if (!firstDay.exists()) { firstDay.update(dayOf(e.ts)); e }
-        else if (firstDay.get() != dayOf(e.ts)) e.copy(common = e.common.copy(is_new = "0"))
-        else e
-      }.iterator
-    }
-  }
-
-  /** [[repairIsNewRaw]] via transformWithState; requires the RocksDB provider.
-    * Gated end-to-end (checkpoint restart included) in MainsSpec. */
-  def repairIsNewRawTws(logs: Dataset[RawLog]): Dataset[RawLog] = {
-    import logs.sparkSession.implicits._
-    logs
-      .groupByKey(_.common.mid)
-      .transformWithState(new RepairIsNewRawProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
-  }
-
-  /** [[dailyUv]] on state API v2 with a NATIVE state TTL — the exact
-    * StateTtlConfig(1 day) mapping (UniqueVisitApp.java:47-53 configures a
-    * processing-time TTL, which is what TTLConfig implements; the
-    * flatMapGroupsWithState twin approximates it with an event-time timeout).
-    */
-  class DailyUvProcessor(ttl: java.time.Duration)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, LogEvent, LogEvent] {
-    import org.apache.spark.sql.streaming.{TimerValues, TTLConfig, ValueState}
-
-    @transient private var lastDay: ValueState[String] = _
-
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      lastDay = getHandle.getValueState[String](
-        "lastVisitDate", org.apache.spark.sql.Encoders.STRING, TTLConfig(ttl))
-
-    override def handleInputRows(key: String, rows: Iterator[LogEvent],
-                                 timerValues: TimerValues): Iterator[LogEvent] = {
-      val sorted = rows.toSeq.sortBy(_.ts)
-      val out = scala.collection.mutable.ArrayBuffer.empty[LogEvent]
-      sorted.foreach { e =>
-        val day = dayOf(e.ts)
-        if (!lastDay.exists() || lastDay.get() != day) { lastDay.update(day); out += e }
-      }
-      out.iterator
-    }
-  }
-
-  /** [[dailyUv]] via transformWithState + native TTL; requires the RocksDB
-    * provider and processing-time mode (TTL is processing-time by contract,
-    * like Flink's). Equivalence with [[dailyUv]] is gated in StatefulSpec. */
-  def dailyUvTws(events: Dataset[LogEvent],
-                 ttl: java.time.Duration = java.time.Duration.ofDays(1)): Dataset[LogEvent] = {
-    import events.sparkSession.implicits._
-    events
-      .filter(org.apache.spark.sql.functions.col("last_page_id").isNull ||
-        org.apache.spark.sql.functions.col("last_page_id") === "")
-      .as[LogEvent]
-      .groupByKey(_.mid)
-      .transformWithState(new DailyUvProcessor(ttl),
-        org.apache.spark.sql.streaming.TimeMode.ProcessingTime(), OutputMode.Append())
-  }
-
-  /** [[detectBounces]] on state API v2 with a REAL event-time timer — the
-    * closest mapping yet to the reference's CEP `within(10s)` timeout branch
-    * (UserJumpDetailApp.java:60-92): the pending session entry registers a
-    * timer at entry_ts + gap; a qualifying follow-up deletes it; the timer
-    * firing IS the timeout-branch emission. */
-  class BounceProcessor(gapMillis: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, LogEvent, LogEvent] {
-    import org.apache.spark.sql.streaming.{ExpiredTimerInfo, TimerValues, TTLConfig, ValueState}
-
-    @transient private var pending: ValueState[LogEvent] = _
-
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      pending = getHandle.getValueState[LogEvent](
-        "pending", org.apache.spark.sql.Encoders.product[LogEvent], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[LogEvent],
-                                 timerValues: TimerValues): Iterator[LogEvent] = {
-      val sorted = rows.toSeq.sortBy(_.ts)
-      val out = scala.collection.mutable.ArrayBuffer.empty[LogEvent]
-      var cur = if (pending.exists()) Some(pending.get()) else None
-      sorted.foreach { e =>
-        cur match {
-          case Some(p) =>
-            if (e.ts > p.ts + gapMillis) { // gap proven in-stream: bounce
-              out += p; cur = None; getHandle.deleteTimer(p.ts + gapMillis)
-            } else if (e.ts >= p.ts && e.page_id.exists(_.nonEmpty)) {
-              // follow-up page view within the gap: not a bounce
-              cur = None; getHandle.deleteTimer(p.ts + gapMillis)
-            }
-          case None =>
-        }
-        if (cur.isEmpty && e.page_id.exists(_.nonEmpty) && e.last_page_id.forall(_.isEmpty)) {
-          cur = Some(e)
-          getHandle.registerTimer(e.ts + gapMillis)
-        }
-      }
-      cur match {
-        case Some(p) => pending.update(p)
-        case None => pending.clear()
-      }
-      out.iterator
-    }
-
-    override def handleExpiredTimer(key: String, timerValues: TimerValues,
-                                    expiredTimerInfo: ExpiredTimerInfo): Iterator[LogEvent] = {
-      // watermark passed entry_ts + gap with no follow-up: the timeout branch
-      val out = if (pending.exists()) Iterator.single(pending.get()) else Iterator.empty
-      pending.clear()
-      out
-    }
-  }
-
-  /** [[detectBounces]] via transformWithState event-time timers; requires the
-    * RocksDB provider and a watermark on the input. Gated in StatefulSpec. */
-  def detectBouncesTws(events: Dataset[LogEvent],
-                       gapMillis: Long = 10000L): Dataset[LogEvent] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.mid)
-      .transformWithState(new BounceProcessor(gapMillis),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
-  }
-
   // ---------------- streaming AS-OF join ----------------
 
   /** One side of the streaming as-of input: `view_id` set for view events,

@@ -4,7 +4,6 @@ import graft.io.Io
 import graft.operators.Relational
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** STREAMING HEAVY-HITTER MAINTENANCE — the streaming twin of the sketch
   * family's counting members (q111's Count-Min cells, q132's Misra–Gries):
@@ -65,9 +64,9 @@ object TopKStream {
   def applyBatch(spark: SparkSession, delta: DataFrame, cellsPath: String,
                  candPath: String, epoch: Long, topN: Int = 10,
                  batchCand: Int = 32): Unit = {
-    CellStore.mergeAdditive(spark,
+    EpochStore.mergeAdditive(spark,
       cellAgg(delta).withColumn("cell", concat_ws("|", col("r"), col("b"))),
-      cellsPath, epoch, "c")
+      cellsPath, "cell", epoch, Seq("c"))
 
     // ---- candidates: only after the cells committed ----
     val candFresh = !Io.dimStoreHasData(candPath) ||
@@ -134,14 +133,4 @@ object TopKStream {
       .join(broadcast(cells), Seq("r", "b"), "left")
       .groupBy("key").agg(min(coalesce(col("c"), lit(0L))).as("est"))
   }
-
-  /** Drive the maintenance from a streaming frame with a `key` column. */
-  def run(spark: SparkSession, keyed: DataFrame, cellsPath: String,
-          candPath: String, checkpoint: String, topN: Int = 10): StreamingQuery =
-    keyed.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (delta: DataFrame, epoch: Long) =>
-        applyBatch(spark, delta, cellsPath, candPath, epoch, topN)
-      }
-      .start()
 }

@@ -4,14 +4,13 @@ import graft.io.Io
 import graft.operators.Relational
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** STREAMING TRENDING MAINTENANCE — the streaming twin of q158's decayed
   * popularity: the batch operator's design decision (decay anchored to
   * EVENT time on absolute Monday-epoch weeks, not to "now") exists exactly
   * so this maintainer can be trivial. A batch's (item, week) counts are
   * constants independent of what else has been absorbed, so maintenance is
-  * the shared [[CellStore]] additive epoch-gated merge, and the maintained
+  * the shared [[EpochStore]] additive epoch-gated merge, and the maintained
   * cells are CELL-FOR-CELL equal to a batch recompute — which makes
   * [[readTrending]] DEFINITIONALLY equal to the batch q158 over everything
   * absorbed (spec-pinned). Re-anchoring to the store's own week span
@@ -29,24 +28,14 @@ object TrendStream {
     * (item, week) cell store. Idempotent per (cell, epoch). */
   def applyBatch(spark: SparkSession, delta: DataFrame, cellsPath: String,
                  epoch: Long): Unit =
-    CellStore.mergeAdditive(spark,
+    EpochStore.mergeAdditive(spark,
       Relational.trendCells(delta)
         .withColumn("cell", concat_ws("|", col("item"), col("w"))),
-      cellsPath, epoch, "ct")
+      cellsPath, "cell", epoch, Seq("ct"))
 
   /** Current trending ranking from the maintained cells — the q158 output
     * shape, equal to the batch operator over everything absorbed. */
   def readTrending(spark: SparkSession, cellsPath: String): DataFrame =
     Relational.trendingFromCells(
       Io.readDim(spark, cellsPath).select("item", "w", "ct"))
-
-  /** Drive the maintenance from a streaming frame with (props, event_time). */
-  def run(spark: SparkSession, events: DataFrame, cellsPath: String,
-          checkpoint: String): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (delta: DataFrame, epoch: Long) =>
-        applyBatch(spark, delta, cellsPath, epoch)
-      }
-      .start()
 }

@@ -21,18 +21,8 @@ class MainsSpec extends SparkSuite {
   private def logLine(mid: String, isNew: String, ts: Long, pageId: String = "home"): String =
     s"""{"common":{"ar":"110000","uid":"u-$mid","ch":"web","is_new":"$isNew","mid":"$mid","vc":"v1"},"page":{"page_id":"$pageId","during_time":30},"ts":$ts}"""
 
-  /** Run `body` with the given state API selected (v2 ⇒ tws twins on RocksDB,
-    * configured by Mains.start from the same conf key a deployment would set). */
-  private def withStateApi(api: String)(body: => Unit): Unit = {
-    spark.conf.set("spark.graft.stateApi", api)
-    try body finally spark.conf.unset("spark.graft.stateApi")
-  }
-
-  for (api <- Seq("v1", "v2"))
-    test(s"base_log restarts from checkpoint on state API $api: " +
-      "exactly-once output + state continuity") { withStateApi(api) { restartBody() } }
-
-  private def restartBody(): Unit = {
+  test("base_log restarts from checkpoint on state API v1: " +
+    "exactly-once output + state continuity") {
     val inDir = tmp("mains-in"); val outDir = tmp("mains-out"); val ckptDir = tmp("mains-ckpt")
     val srcDir = new java.io.File(s"$inDir/ods_base_log"); srcDir.mkdirs()
 
@@ -88,53 +78,6 @@ class MainsSpec extends SparkSuite {
     val page = spark.read.json(s"$outDir/dwd_page_log")
     assert(page.count() == n, s"all $n events present after restart")
     assert(page.select("mid").distinct().count() == n, "no event delivered twice")
-  }
-
-  test("unique_visit and user_jump_detail run END-TO-END on state API v2 (tws)") {
-    withStateApi("v2") {
-      // unique_visit: two visits by one device on one day → one UV row
-      val uvIn = tmp("uv2-in"); val uvOut = tmp("uv2-out"); val uvCk = tmp("uv2-ck")
-      val pageDir = new java.io.File(s"$uvIn/dwd_page_log"); pageDir.mkdirs()
-      def pageRow(mid: String, ts: Long, lastPage: String): String = {
-        val lp = if (lastPage == null) "null" else s""""$lastPage""""
-        s"""{"mid":"$mid","uid":"u-$mid","ar":"1","ch":"web","vc":"v1","is_new":"0","page_id":"home","last_page_id":$lp,"during_time":10,"ts":$ts}"""
-      }
-      Files.write(new java.io.File(pageDir, "b.jsonl").toPath, java.util.Arrays.asList(
-        pageRow("mT", day1, null), pageRow("mT", day1 + 5000L, null)))
-      // the tws uniqueVisit runs in ProcessingTime mode (native TTL contract),
-      // and a ProcessingTime transformWithState does NOT self-terminate under
-      // Trigger.AvailableNow — it keeps scheduling micro-batches while TTL
-      // timers are pending. Poll the sink and stop, exactly like the
-      // StatefulTws specs; awaitTermination would hang forever here.
-      val uvQs = Mains.start(spark, "unique_visit", uvIn, uvOut, uvCk)
-      try {
-        val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-        def uvRows(): Long =
-          try spark.read.json(s"$uvOut/dwm_unique_visit")
-            .filter(col("mid").isNotNull).count()
-          catch { case _: org.apache.spark.sql.AnalysisException => 0L } // sink not created yet
-        while (uvRows() < 1 && uvQs.forall(_.exception.isEmpty) &&
-          System.nanoTime() < deadline) Thread.sleep(100)
-        uvQs.flatMap(_.exception).foreach(throw _)
-      } finally uvQs.foreach(_.stop())
-      val uv = spark.read.json(s"$uvOut/dwm_unique_visit")
-      assert(uv.collect().map(_.getAs[String]("mid")).toSeq == Seq("mT"),
-        "native-TTL tws dedup: one row per device-day")
-
-      // user_jump_detail: unanswered entry bounces via a REAL event-time timer
-      val ujIn = tmp("uj2-in"); val ujOut = tmp("uj2-out"); val ujCk = tmp("uj2-ck")
-      val ujPage = new java.io.File(s"$ujIn/dwd_page_log"); ujPage.mkdirs()
-      Files.write(new java.io.File(ujPage, "b.jsonl").toPath, java.util.Arrays.asList(
-        pageRow("mJ2", day1, null),               // entry, never followed → bounce
-        pageRow("mW2", day1 + 60000L, "home")))   // watermark driver
-      Mains.start(spark, "user_jump_detail", ujIn, ujOut, ujCk).foreach(_.awaitTermination())
-      Files.write(new java.io.File(ujPage, "b2.jsonl").toPath, java.util.Arrays.asList(
-        pageRow("mW2", day1 + 120000L, "home")))  // advance watermark → timer fires
-      Mains.start(spark, "user_jump_detail", ujIn, ujOut, ujCk).foreach(_.awaitTermination())
-      val uj = spark.read.json(s"$ujOut/dwm_user_jump_detail")
-      assert(uj.select("mid").collect().map(_.getString(0)).toSet == Set("mJ2"),
-        "tws event-time timer emitted exactly the timed-out entry")
-    }
   }
 
   test("base_log repairs is_new BEFORE the split: start events carry it too") {

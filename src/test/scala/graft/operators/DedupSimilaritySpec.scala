@@ -543,11 +543,14 @@ class DedupSimilaritySpec extends SparkSuite {
     // cellCap is a call-site parameter.
     import spark.implicits._
     val st = (1 to 6).map(i => (s"s$i", s"sh$i")).toDF("source", "sh")
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val e = intercept[IllegalArgumentException] {
       Dedup.sourceOverlapFrom(st, cellCap = 5)
     }
     assert(e.getMessage.contains("source-combination cells exceed"),
       s"named refusal expected, got: ${e.getMessage}")
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore).isEmpty,
+      "the refusal must release the persisted cell frame")
   }
 
   test("centroidDrift: driver centroid replay; a shifted clone of a source drifts, the source itself doesn't") {

@@ -1202,11 +1202,14 @@ class TextOpsSpec extends SparkSuite {
     // cells against a budget of 5.
     import spark.implicits._
     val st = (1 to 6).map(i => (s"s$i", s"term$i")).toDF("source", "term")
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val e = intercept[IllegalArgumentException] {
       TextOps.sourceSelectFrom(spark, st, k = 2, cellCap = 5)
     }
     assert(e.getMessage.contains("source-combination cells exceed"),
       s"named refusal expected, got: ${e.getMessage}")
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore).isEmpty,
+      "the refusal must release the persisted cell frame")
   }
 
   test("budgetAllocate: driver water-filling replay; allocation feasible, budget-tight, cap-respecting") {

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * (segment, replicate) moment cells add across batches — the maintained
   * store must be cell-for-cell equal to a batch recompute and the read
   * path must equal the batch q169 EXACTLY over everything absorbed. Also
-  * the first exerciser of CellStore.mergeAdditive's MULTI-COLUMN form
+  * the first exerciser of EpochStore.mergeAdditive's MULTI-COLUMN form
   * (swc and sw must gate together per cell). */
 class BootstrapStreamSpec extends SparkSuite {
   import spark.implicits._

@@ -95,7 +95,9 @@ class EntityRegistrySpec extends SparkSuite {
     val ms = MemoryStream[(Long, String, Int, String, Long)]
     val src = ms.toDS().select(col("_1").as("c_custkey"), col("_2").as("c_name"),
       col("_3").as("c_nationkey"), col("_4").as("c_mktsegment"), col("_5").as("cents"))
-    val q = EntityRegistry.run(spark, src, store, ckpt)
+    val q = EpochStore.run(src, ckpt) { (delta, epoch) =>
+      EntityRegistry.applyBatch(spark, delta, store, epoch)
+    }
     try {
       ms.addData(rows.filter(_._1 % 10 != 0).toSeq)
       q.processAllAvailable()

@@ -173,7 +173,7 @@ class FacilityStreamSpec extends SparkSuite {
     // publish leaves SOME cells at epoch e (already holding the batch's
     // sums) and others at e-1 (not yet). A head-sampled done-gate would
     // skip the replay's add and silently lose the unpublished buckets;
-    // the fix gates per ROW, exactly MixtureStream.mergeAdditive's rule.
+    // the fix gates per ROW, exactly EpochStore.mergeAdditive's rule.
     val (poolP, cellsP) = (tmp("pool-m"), tmp("cells-m"))
     val order = md5Order
     val bottom = order.take(16).toSet

@@ -215,7 +215,9 @@ class IncrementalMvSpec extends SparkSuite {
         col("event_type"), col("value"))
     val rows1 = Seq((t0, "view", 1.10), (t0 + 1000, "click", 2.20))
     val rows2 = Seq((t0 + 2000, "view", 3.30))
-    val q = IncrementalMv.run(spark, events, store, ckpt)
+    val q = EpochStore.run(events, ckpt) { (delta, epoch) =>
+      IncrementalMv.applyBatch(spark, delta, store, epoch)
+    }
     ms.addData(rows1: _*); q.processAllAvailable()
     ms.addData(rows2: _*); q.processAllAvailable()
     q.stop()

@@ -95,9 +95,11 @@ class QualityStreamSpec extends SparkSuite {
       col("o_orderstatus"), col("o_totalprice"))
       .as[(Long, Long, String, Double)].collect()
     val ms = MemoryStream[(Long, Long, String, Double)]
-    val q = QualityStream.run(spark,
+    val q = EpochStore.run(
       ms.toDS().toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"),
-      s, java.nio.file.Files.createTempDirectory("graft-qs-ckpt").toString)
+      java.nio.file.Files.createTempDirectory("graft-qs-ckpt").toString) {
+      (delta, epoch) => QualityStream.applyBatch(spark, delta, s, epoch)
+    }
     val chunks = rows.grouped((rows.length + 1) / 2).toSeq
     chunks.foreach { c => ms.addData(c.toSeq); q.processAllAvailable() }
     q.stop()

@@ -60,10 +60,12 @@ class RateWatchSpec extends SparkSuite {
     val rows = events.select(col("event_type").as[String],
       col("event_time").cast("long").as[Long]).collect()
     val ms = MemoryStream[(String, Long)]
-    val q = RateWatch.run(spark,
+    val q = EpochStore.run(
       ms.toDS().toDF("event_type", "secs")
         .select(col("event_type"), timestamp_seconds(col("secs")).as("event_time")),
-      s, java.nio.file.Files.createTempDirectory("graft-rw-ckpt").toString)
+      java.nio.file.Files.createTempDirectory("graft-rw-ckpt").toString) {
+      (delta, epoch) => RateWatch.applyBatch(spark, delta, s, epoch)
+    }
     val chunks = rows.grouped((rows.length + 1) / 2).toSeq
     chunks.foreach { c => ms.addData(c.toSeq); q.processAllAvailable() }
     q.stop()

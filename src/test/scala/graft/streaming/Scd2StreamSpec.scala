@@ -140,7 +140,9 @@ class Scd2StreamSpec extends SparkSuite {
     val m = 60000L
     val b1 = Seq((1L, "view", t0, 1L), (2L, "view", t0 + m, 2L))
     val b2 = Seq((1L, "click", t0 + 2 * m, 3L))
-    val q = Scd2Stream.run(spark, log, dir, ckpt)
+    val q = EpochStore.run(log, ckpt) { (delta, epoch) =>
+      Scd2Stream.applyBatch(spark, delta, dir, epoch)
+    }
     ms.addData(b1: _*); q.processAllAvailable()
     ms.addData(b2: _*); q.processAllAvailable()
     q.stop()

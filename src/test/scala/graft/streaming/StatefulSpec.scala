@@ -73,120 +73,6 @@ class StatefulSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  /** transformWithState needs the RocksDB provider; the checkpoint-file
-    * checksum path deadlocks in this container (round-1 note in
-    * Stateful.scala) — run `body` with the provider on and checksums off,
-    * under a watchdog so a resurfaced deadlock fails loudly instead of
-    * hanging the suite. */
-  private def withRocksDbTws(body: => Unit): Unit = {
-    val conf = spark.conf
-    val prevProvider = conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    val prevChecksum = conf.getOption("spark.sql.streaming.checkpoint.fileChecksum.enabled")
-    conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-    try {
-      var err: Option[Throwable] = None
-      val worker = new Thread(() => try body catch { case t: Throwable => err = Some(t) })
-      worker.setDaemon(true)
-      worker.start()
-      worker.join(180000L)
-      assert(!worker.isAlive, "RocksDB/transformWithState micro-batches deadlocked (>180s)")
-      err.foreach(throw _)
-    } finally {
-      prevProvider.fold(conf.unset("spark.sql.streaming.stateStore.providerClass"))(
-        conf.set("spark.sql.streaming.stateStore.providerClass", _))
-      prevChecksum.fold(conf.unset("spark.sql.streaming.checkpoint.fileChecksum.enabled"))(
-        conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", _))
-    }
-  }
-
-  test("repairIsNewTws (transformWithState + RocksDB) matches repairIsNew cross-batch") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val ms = MemoryStream[LogEvent]
-    var q: org.apache.spark.sql.streaming.StreamingQuery = null
-    try {
-      val day1 = 1700000000000L
-      val day2 = day1 + 86400000L
-      withRocksDbTws {
-        q = Stateful.repairIsNewTws(ms.toDS()).writeStream
-          .format("memory").queryName("repair_tws_out").outputMode("append").start()
-        ms.addData(ev("m1", day1, "1"), ev("m2", day1, "1"))
-        q.processAllAvailable()
-        ms.addData(ev("m1", day2, "1"), ev("m3", day2, "1"))
-        q.processAllAvailable()
-      }
-      val byMidTs = spark.table("repair_tws_out").as[LogEvent].collect()
-        .map(e => (e.mid, e.ts) -> e.is_new).toMap
-      // identical contract to the flatMapGroupsWithState twin above
-      assert(byMidTs(("m1", day1)) == "1")
-      assert(byMidTs(("m1", day2)) == "0", "cross-batch RocksDB state repaired the stale claim")
-      assert(byMidTs(("m2", day1)) == "1")
-      assert(byMidTs(("m3", day2)) == "1")
-    } finally if (q != null) q.stop()
-  }
-
-  test("dailyUvTws (native TTLConfig) matches dailyUv's dedup contract cross-batch") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val ms = MemoryStream[LogEvent]
-    var q: org.apache.spark.sql.streaming.StreamingQuery = null
-    try {
-      val t0 = 1700000000000L
-      withRocksDbTws {
-        q = Stateful.dailyUvTws(ms.toDS()).writeStream
-          .format("memory").queryName("uv_tws_out").outputMode("append").start()
-        // ProcessingTime mode schedules batches continuously (TTL sweeps can
-        // fire anytime), so processAllAvailable never quiesces — poll the sink
-        def awaitRows(n: Long): Unit = {
-          val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-          while (spark.table("uv_tws_out").count() < n && System.nanoTime() < deadline &&
-            q.exception.isEmpty) Thread.sleep(200)
-          q.exception.foreach(throw _)
-        }
-        ms.addData(
-          ev("m1", t0),                                  // first entry: kept
-          ev("m1", t0 + 1000),                           // same day: dropped
-          ev("m1", t0 + 2000, lastPage = Some("home")))  // not an entry: dropped
-        awaitRows(1)
-        ms.addData(ev("m1", t0 + 5000), ev("m2", t0 + 5000)) // m1 dup cross-batch, m2 new
-        awaitRows(2)
-        // one extra poll round so a late wrong emission would still be caught
-        Thread.sleep(1000)
-      }
-      val out = spark.table("uv_tws_out").as[LogEvent].collect()
-      assert(out.map(e => (e.mid, e.ts)).toSet == Set(("m1", t0), ("m2", t0 + 5000)))
-    } finally if (q != null) q.stop()
-  }
-
-  test("detectBouncesTws (event-time timers) emits the CEP timeout branch") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val ms = MemoryStream[LogEvent]
-    var q: org.apache.spark.sql.streaming.StreamingQuery = null
-    try {
-      val t0 = 1700000000000L
-      withRocksDbTws {
-        q = Stateful.detectBouncesTws(withWatermarkDs(ms), gapMillis = 10000L).writeStream
-          .format("memory").queryName("bounce_tws_out").outputMode("append").start()
-        ms.addData(
-          ev("m1", t0),                                 // entry…
-          ev("m1", t0 + 3000, lastPage = Some("home")), // …followed within 10 s: no bounce
-          ev("m2", t0))                                 // entry, nothing after (yet)
-        q.processAllAvailable()
-        ms.addData(ev("m3", t0 + 60000)) // watermark passes m2's timer
-        q.processAllAvailable()
-        ms.addData(ev("m4", t0 + 120000)) // fires m3's timer too
-        q.processAllAvailable()
-      }
-      val out = spark.table("bounce_tws_out").as[LogEvent].collect()
-      assert(out.exists(e => e.mid == "m2" && e.ts == t0),
-        s"m2's timer fired the timeout branch: ${out.toSeq}")
-      assert(!out.exists(_.mid == "m1"), "m1 had a follow-up within gap: timer deleted")
-    } finally if (q != null) q.stop()
-  }
-
   test("streamingAsof matches the batch as-of join semantics cross-batch") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -215,40 +101,6 @@ class StatefulSpec extends SparkSuite {
         100L -> Some(11L), 200L -> None, 300L -> Some(30L),
         101L -> Some(11L), 102L -> Some(12L)), s"got $got")
     } finally q.stop()
-  }
-
-  test("repairIsNewTws restarts from a RocksDB checkpoint with state intact") {
-    import spark.implicits._
-    val inDir = java.nio.file.Files.createTempDirectory("tws-in").toString
-    val outDir = java.nio.file.Files.createTempDirectory("tws-out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("tws-ckpt").toString
-    val day1 = 1700000000000L
-    val day2 = day1 + 86400000L
-    def logLine(mid: String, isNew: String, ts: Long): String =
-      s"""{"mid":"$mid","uid":"u","ar":"1","ch":"web","vc":"v1","is_new":"$isNew","page_id":"home","during_time":1,"ts":$ts}"""
-    def runOnce(): Unit = withRocksDbTws {
-      val src = spark.readStream
-        .schema(org.apache.spark.sql.Encoders.product[LogEvent].schema)
-        .json(inDir).as[LogEvent]
-      val q = Stateful.repairIsNewTws(src).toDF()
-        .writeStream.format("json")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    java.nio.file.Files.write(java.nio.file.Paths.get(inDir, "b1.jsonl"),
-      java.util.Arrays.asList(logLine("t1", "1", day1)))
-    runOnce()
-    // restart: the day-2 claim can only be repaired if the RocksDB state
-    // (firstVisitDate=day1) survived the checkpoint round-trip
-    java.nio.file.Files.write(java.nio.file.Paths.get(inDir, "b2.jsonl"),
-      java.util.Arrays.asList(logLine("t1", "1", day2)))
-    runOnce()
-    val out = spark.read.json(outDir).collect()
-      .map(r => r.getAs[Long]("ts") -> r.getAs[String]("is_new")).toMap
-    assert(out == Map(day1 -> "1", day2 -> "0"),
-      s"exactly-once + RocksDB state continuity across restart: $out")
   }
 
   test("dailyUv keeps only first session-entry per device per day") {

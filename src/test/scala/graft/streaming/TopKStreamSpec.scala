@@ -155,11 +155,12 @@ class TopKStreamSpec extends SparkSuite {
     val (cellsD, candD) = (tmp("cells-d"), tmp("cand-d"))
     val ids = allIds.as[Long].collect()
     val ms = MemoryStream[Long]
-    val q = TopKStream.run(spark,
+    val q = EpochStore.run(
       ms.toDS().toDF("event_id")
         .select(Relational.geometricLevelKey(col("event_id")).as("key")),
-      cellsS, candS,
-      java.nio.file.Files.createTempDirectory("graft-topk-ckpt").toString)
+      java.nio.file.Files.createTempDirectory("graft-topk-ckpt").toString) {
+      (delta, epoch) => TopKStream.applyBatch(spark, delta, cellsS, candS, epoch)
+    }
     val chunks = ids.grouped((ids.length + 2) / 3).toSeq
     chunks.foreach { c => ms.addData(c.toSeq); q.processAllAvailable() }
     q.stop()

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * cells must be cell-for-cell equal to a batch recompute, and the read
   * path must equal the batch q158 EXACTLY — full row equality including
   * scores and ranks — over everything absorbed. Epoch-gate recovery is the
-  * shared CellStore discipline (exercised across three maintainers now). */
+  * shared EpochStore discipline (exercised across three maintainers now). */
 class TrendStreamSpec extends SparkSuite {
   import spark.implicits._
 
