@@ -45,19 +45,38 @@ object Apps {
     * (repair at :156-204 precedes the split at :213-257), so the start and
     * display outputs carry the repaired flag too. Unparseable records (null
     * common/ts after permissive from_json) route to the dirty output instead
-    * of crashing the typed stream — the reference's dirty side-output. */
-  def baseLog(inputs: Map[String, DataFrame]): Map[String, DataFrame] = {
+    * of crashing the typed stream — the reference's dirty side-output.
+    *
+    * The composition of [[baseLogRepaired]] (the streaming half) and
+    * [[baseLogSplit]] (stateless): `Mains` runs the first as one streaming
+    * query and applies the second to each micro-batch, so the stream and
+    * this batch twin run the same code. */
+  def baseLog(inputs: Map[String, DataFrame]): Map[String, DataFrame] =
+    baseLogSplit(baseLogRepaired(inputs))
+
+  /** ods_base_log parsed once; one keyed `is_new` repair over the clean rows,
+    * the dirty rows carried alongside unchanged (same columns). */
+  def baseLogRepaired(inputs: Map[String, DataFrame]): DataFrame = {
     val parsed = Pipelines.parseRawLog(inputs("ods_base_log"))
     import parsed.sparkSession.implicits._
-    val dirty = parsed.filter(col("common").isNull || col("ts").isNull)
-    val clean = parsed.filter(col("common").isNotNull && col("ts").isNotNull)
-    // one repaired frame for all three branches: each sink query executes
-    // the plan with its own state store
-    val (start, page, display) =
-      Pipelines.splitLog(Stateful.repairIsNewRaw(clean.as[graft.streaming.RawLog]).toDF())
-    Map("dwd_start_log" -> start, "dwd_page_log" -> toLogEvents(page).toDF(),
-      "dwd_display_log" -> display, "dwd_dirty_log" -> dirty)
+    Stateful.repairIsNewRaw(parsed.filter(!dirtyLog).as[graft.streaming.RawLog]).toDF()
+      .union(parsed.filter(dirtyLog))
   }
+
+  /** [[baseLogRepaired]]'s rows → the four DWD topics. */
+  def baseLogSplit(repaired: DataFrame): Map[String, DataFrame] = {
+    val (start, page, display) = Pipelines.splitLog(repaired.filter(!dirtyLog))
+    Map("dwd_start_log" -> start, "dwd_page_log" -> toLogEvents(page).toDF(),
+      "dwd_display_log" -> display, "dwd_dirty_log" -> repaired.filter(dirtyLog))
+  }
+
+  private def dirtyLog = col("common").isNull || col("ts").isNull
+
+  /** Whether `df` already carries an event-time watermark (re-defining one
+    * is illegal): a file- or Kafka-read topic has none, a chained in-process
+    * frame may. */
+  private[apps] def hasWatermark(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.output.exists(_.metadata.contains("spark.watermarkDelayMs"))
 
   /** UniqueVisitApp (app/dwm/UniqueVisitApp.java): daily first visit per mid. */
   def uniqueVisit(inputs: Map[String, DataFrame]): Map[String, DataFrame] = {
@@ -150,10 +169,8 @@ object Apps {
     // Watermark: the chained [[orderWide]] output already carries one on
     // i_time (re-defining is illegal), but a standalone deployment fed from a
     // raw Kafka topic does not — apply one only if absent.
-    val hasWatermark = raw.queryExecution.analyzed.output
-      .exists(_.metadata.contains("spark.watermarkDelayMs"))
     val ow =
-      if (raw.isStreaming && !hasWatermark) raw.withWatermark("i_time", "3 seconds")
+      if (raw.isStreaming && !hasWatermark(raw)) raw.withWatermark("i_time", "3 seconds")
       else raw
     val orderCount =
       if (ow.isStreaming) approx_count_distinct(col("id")).as("order_count")

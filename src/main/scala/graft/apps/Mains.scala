@@ -4,6 +4,8 @@ import java.io.File
 
 import graft.streaming.{CdcRouter, LogEvent, OrderDetail, OrderInfo, PaymentInfo}
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
+import org.apache.spark.sql.execution.streaming.sinks.FileStreamSink
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
@@ -14,10 +16,16 @@ import org.apache.spark.sql.types._
   *
   *  - inputs stream from `inDir/<topic>` as JSONL with an explicit wire schema
   *    (`ods_base_log` is raw text lines; `dim_*` inputs are static reads);
+  *  - each app is ONE streaming query (as each reference app is one Flink
+  *    job); its micro-batch is computed once and fanned out to its topics;
   *  - outputs land in `outDir/<topic>` through Spark's transactional file sink
-  *    (manifest-committed ⇒ exactly-once across restarts, proven by
-  *    CheckpointRestartSpec);
-  *  - each output query checkpoints under `ckptDir/<topic>`.
+  *    (manifest-committed per topic ⇒ exactly-once across restarts and
+  *    partial fan-out commits, proven by MainsSpec);
+  *  - `base_log` (four topics) checkpoints under `ckptDir/base_log`, a
+  *    single-topic app under `ckptDir/<topic>`, `base_db` under
+  *    `ckptDir/base_db`. A `base_log` checkpoint of the earlier layout (one
+  *    query per topic, `ckptDir/<topic>` ×4) is not picked up: such a
+  *    deployment restarts `base_log` from an empty checkpoint.
   *
   * On a cluster with the Kafka connector jar the file bindings swap for
   * Io.kafkaStream / Io.kafkaSink with NO change to the transforms (see
@@ -126,32 +134,57 @@ object Mains {
       .filter(_.isDirectory).map(_.getName).sorted.toSeq
   }
 
-  private def sinkAll(outputs: Map[String, DataFrame], outDir: String, ckptDir: String,
-                      trigger: Trigger): Seq[StreamingQuery] =
-    outputs.toSeq.sortBy(_._1).map { case (topic, df) =>
-      df.writeStream.format("json")
-        .option("path", s"$outDir/$topic")
-        .option("checkpointLocation", s"$ckptDir/$topic")
-        .outputMode("append")
-        .trigger(trigger)
-        .start()
-    }
-
-  private def hasWatermark(df: DataFrame): Boolean =
-    df.queryExecution.analyzed.output.exists(_.metadata.contains("spark.watermarkDelayMs"))
+  /** The one sink binding: one streaming query over `stream`, checkpointed
+    * under `ckptDir/<name>`. Each micro-batch is computed once and `split`
+    * into its topics; it is persisted only when it feeds more than one.
+    *
+    * Every topic commits through Spark's file-sink manifest
+    * (`outDir/<topic>/_spark_metadata`), which downstream file sources read
+    * and which skips a batch id the topic has already committed. A replay
+    * after a partial fan-out (some topics committed, the query's commit log
+    * not) therefore rewrites only the missing topics: exactly-once and atomic
+    * visibility per topic. `FileStreamSink` is Spark-internal, the same class
+    * `writeStream.format("json")` instantiates. Each topic is written by one
+    * task per core rather than one per state partition; the state partition
+    * count recorded in the checkpoint does not change. */
+  private def fanOut(name: String, stream: DataFrame, outDir: String, ckptDir: String,
+                     trigger: Trigger)(split: DataFrame => Map[String, DataFrame]): StreamingQuery = {
+    val spark = stream.sparkSession
+    // built at start, as `writeStream.format("json")` builds its sink: each
+    // topic's directory and manifest exist before the first batch, so a
+    // downstream app can bind to the topic right away
+    val sinks = split(stream).keys.map(topic => topic ->
+      new FileStreamSink(spark, s"$outDir/$topic", new JsonFileFormat, Nil, Map.empty)).toMap
+    stream.writeStream
+      .option("checkpointLocation", s"$ckptDir/$name")
+      .trigger(trigger)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val topics = split(batch)
+        val shared = topics.size > 1
+        if (shared) batch.persist()
+        try topics.toSeq.sortBy(_._1).foreach { case (topic, df) =>
+          sinks(topic).addBatch(batchId, df.coalesce(spark.sparkContext.defaultParallelism))
+        } finally if (shared) batch.unpersist()
+      }
+      .start()
+  }
 
   /** Bind and launch one app's queries. Returns the started queries so callers
     * (and the checkpoint-restart spec) own their lifecycle; [[main]] awaits. */
   def start(spark: SparkSession, app: String, inDir: String, outDir: String,
             ckptDir: String, trigger: Trigger = Trigger.AvailableNow(),
             sourceOptions: Map[String, String] = Map.empty): Seq[StreamingQuery] = {
-    def sink(outputs: Map[String, DataFrame]) = sinkAll(outputs, outDir, ckptDir, trigger)
+    // single-topic apps: the one-topic case of fanOut, under ckptDir/<topic>
+    def sink(outputs: Map[String, DataFrame]) = outputs.toSeq.sortBy(_._1).map { case (topic, df) =>
+      fanOut(topic, df, outDir, ckptDir, trigger)(batch => Map(topic -> batch))
+    }
     def streamJson(spark: SparkSession, inDir: String, topic: String, schema: StructType) =
       Mains.streamJson(spark, inDir, topic, schema, sourceOptions)
     app match {
       case "base_log" =>
-        sink(Apps.baseLog(Map("ods_base_log" ->
-          spark.readStream.options(sourceOptions).text(s"$inDir/ods_base_log"))))
+        Seq(fanOut("base_log", Apps.baseLogRepaired(Map("ods_base_log" ->
+          spark.readStream.options(sourceOptions).text(s"$inDir/ods_base_log"))),
+          outDir, ckptDir, trigger)(Apps.baseLogSplit))
       case "unique_visit" =>
         sink(Apps.uniqueVisit(Map(
           "dwd_page_log" -> streamJson(spark, inDir, "dwd_page_log", Wire.logEvent))))
@@ -171,7 +204,7 @@ object Mains {
         // a file-read dwm_order_wide carries no watermark (unlike the chained
         // in-process DF) — the stream-stream interval join needs one per side
         val owRaw = streamJson(spark, inDir, "dwm_order_wide", Wire.orderWide(spark))
-        val ow = if (hasWatermark(owRaw)) owRaw else owRaw.withWatermark("i_time", "3 seconds")
+        val ow = if (Apps.hasWatermark(owRaw)) owRaw else owRaw.withWatermark("i_time", "3 seconds")
         sink(Apps.paymentWide(Map(
           "dwd_payment_info" -> streamJson(spark, inDir, "dwd_payment_info", Wire.paymentInfo),
           "dwm_order_wide" -> ow)))

@@ -39,12 +39,14 @@ object Pipelines {
   def parseRawLog(raw: DataFrame): DataFrame =
     raw.select(from_json(col("value"), rawLogSchema).as("j")).select("j.*")
 
-  /** BaseLog 3-way split (A14, BaseLogApp.java:213-257): one parsed log stream
-    * → (start, page, display) derivatives. Spark has no side outputs; three
-    * filtered plans over one source cost one scan each in streaming mode and
-    * share the parse. `displays` rows are exploded with the page_id injected,
-    * as the reference does. Expects columns: common struct, page struct,
-    * start struct, displays array, ts. */
+  /** BaseLog 3-way split (A14, BaseLogApp.java:213-257): one parsed log frame
+    * → (start, page, display) derivatives. Spark has no side outputs: the
+    * three are filtered plans over the same frame. Run as three streaming
+    * queries they would each scan and parse the source; `Mains` instead
+    * applies the split to each micro-batch of one query, persisted once
+    * (`Apps.baseLogSplit`). `displays` rows are exploded with the page_id
+    * injected, as the reference does. Expects columns: common struct, page
+    * struct, start struct, displays array, ts. */
   def splitLog(parsed: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     val start = parsed.filter(col("start").isNotNull)
     val page = parsed.filter(col("start").isNull)

@@ -2,6 +2,8 @@ package graft.apps
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
@@ -92,6 +94,91 @@ class MainsSpec extends SparkSuite {
     assert(start.count() == 1)
     assert(start.head.getAs[org.apache.spark.sql.Row]("common").getAs[String]("is_new") == "0",
       "the day2 start event's stale is_new=1 is repaired pre-split (BaseLogApp order)")
+  }
+
+  /** An ODS backlog over `files` files: page events of 100 devices over two
+    * days (so the is_new repair has work), display and start events, and
+    * one unparseable record. */
+  private def odsBacklog(srcDir: java.io.File, files: Int = 8): Unit = {
+    def common(mid: String, isNew: String) =
+      s""""common":{"ar":"1","uid":"u-$mid","ch":"web","is_new":"$isNew","mid":"$mid","vc":"v1"}"""
+    (0 until files).foreach { f =>
+      val lines = (0 until 40).map { i =>
+        val n = f * 40 + i
+        val mid = s"d${n % 100}"
+        val ts = (if (n < 160) day1 else day2) + n * 1000L
+        n % 10 match {
+          case 0 => s"""{${common(mid, "1")},"start":{"entry":"icon","loading_time":10},"ts":$ts}"""
+          case 1 => s"""{${common(mid, "1")},"page":{"page_id":"home","during_time":5},""" +
+            s""""displays":[{"display_type":"promotion","item":"$n","item_type":"sku_id","pos_id":1,"order":1}],"ts":$ts}"""
+          case _ => logLine(mid, if (n % 3 == 0) "0" else "1", ts)
+        }
+      } ++ (if (f == 0) Seq("not json") else Nil)
+      Files.write(new java.io.File(srcDir, f"ods$f%02d.txt").toPath, java.util.Arrays.asList(lines: _*))
+    }
+  }
+
+  private val baseLogTopics = Seq("dwd_dirty_log", "dwd_display_log", "dwd_page_log", "dwd_start_log")
+
+  /** Paths in one batch entry of a topic's file-sink manifest. */
+  private def manifestFiles(topicDir: String, batchId: Long): Int =
+    Files.readAllLines(java.nio.file.Paths.get(topicDir, "_spark_metadata", batchId.toString))
+      .asScala.drop(1).count(_.nonEmpty) // line 1 is the log version
+
+  test("base_log is one query with one state store, at most one file per core per topic batch") {
+    val inDir = tmp("one-in"); val outDir = tmp("one-out"); val ckptDir = tmp("one-ckpt")
+    val srcDir = new java.io.File(s"$inDir/ods_base_log"); srcDir.mkdirs()
+    odsBacklog(srcDir)
+    val qs = Mains.start(spark, "base_log", inDir, outDir, ckptDir)
+    qs.foreach(_.awaitTermination())
+    assert(qs.size == 1, s"one streaming query per app, not one per topic (${qs.size})")
+    assert(qs.head.lastProgress.stateOperators.length == 1, "one is_new state store")
+    assert(new java.io.File(s"$ckptDir/base_log/commits/0").isFile, "one checkpoint: ckptDir/base_log")
+    val cores = spark.sparkContext.defaultParallelism
+    baseLogTopics.foreach { t =>
+      val n = manifestFiles(s"$outDir/$t", 0)
+      assert(n >= 1 && n <= cores, s"$t: $n part files in batch 0 (at most $cores)")
+    }
+  }
+
+  test("base_log's topics exist from its start, so a downstream app binds before the first batch") {
+    val inDir = tmp("bind-in"); val outDir = tmp("bind-out"); val ckptDir = tmp("bind-ckpt")
+    new java.io.File(s"$inDir/ods_base_log").mkdirs()
+    val qs = Mains.start(spark, "base_log", inDir, outDir, ckptDir,
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 hour"))
+    try {
+      baseLogTopics.foreach(t => assert(new java.io.File(s"$outDir/$t/_spark_metadata").isDirectory, t))
+      Mains.start(spark, "unique_visit", outDir, tmp("bind-uv"), ckptDir).foreach(_.awaitTermination())
+    } finally qs.foreach(_.stop())
+  }
+
+  test("base_log replays a partially committed fan-out exactly once per topic") {
+    val inDir = tmp("part-in"); val outDir = tmp("part-out"); val ckptDir = tmp("part-ckpt")
+    val srcDir = new java.io.File(s"$inDir/ods_base_log"); srcDir.mkdirs()
+    odsBacklog(srcDir)
+    Mains.start(spark, "base_log", inDir, outDir, ckptDir).foreach(_.awaitTermination())
+    // a crash after two topics committed batch 0 and before the other two and
+    // the query's commit log did: their last manifest entries and the last
+    // commits/ entry are gone, the written part files stay on disk
+    def dropLast(dir: String): Option[Long] = {
+      val last = Option(new java.io.File(dir).list()).toSeq.flatten
+        .filter(_.forall(_.isDigit)).map(_.toLong).maxOption
+      last.foreach(n => Seq(s"$n", s".$n.crc").foreach(f => Files.deleteIfExists(java.nio.file.Paths.get(dir, f))))
+      last
+    }
+    Seq("dwd_page_log", "dwd_display_log").foreach(t => dropLast(s"$outDir/$t/_spark_metadata"))
+    assert(dropLast(s"$ckptDir/base_log/commits").contains(0L), "one batch committed")
+    Mains.start(spark, "base_log", inDir, outDir, ckptDir).foreach(_.awaitTermination())
+
+    val twin = Apps.baseLog(Map("ods_base_log" -> spark.read.text(s"$inDir/ods_base_log")))
+    val diffs = baseLogTopics.map { t =>
+      val want = twin(t)
+      val got = spark.read.schema(want.schema).json(s"$outDir/$t")
+      assert(want.count() > 0, s"$t: empty twin")
+      (t, want.exceptAll(got).count(), got.exceptAll(want).count())
+    }
+    assert(diffs.forall { case (_, missing, extra) => missing + extra == 0 },
+      diffs.map { case (t, m, x) => s"$t: $m rows missing, $x extra" }.mkString("; "))
   }
 
   test("visitor_stats windows close across drain runs (watermark from checkpoint)") {
