@@ -2,10 +2,9 @@ package graft.apps
 
 import java.io.File
 
+import graft.io.Io
 import graft.streaming.{CdcRouter, LogEvent, OrderDetail, OrderInfo, PaymentInfo}
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
-import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
-import org.apache.spark.sql.execution.streaming.sinks.FileStreamSink
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
@@ -143,18 +142,16 @@ object Mains {
     * and which skips a batch id the topic has already committed. A replay
     * after a partial fan-out (some topics committed, the query's commit log
     * not) therefore rewrites only the missing topics: exactly-once and atomic
-    * visibility per topic. `FileStreamSink` is Spark-internal, the same class
-    * `writeStream.format("json")` instantiates. Each topic is written by one
-    * task per core rather than one per state partition; the state partition
-    * count recorded in the checkpoint does not change. */
+    * visibility per topic (the binding is [[Io.jsonFileSink]]). Each topic is
+    * written by one task per core rather than one per state partition; the
+    * state partition count recorded in the checkpoint does not change. */
   private def fanOut(name: String, stream: DataFrame, outDir: String, ckptDir: String,
                      trigger: Trigger)(split: DataFrame => Map[String, DataFrame]): StreamingQuery = {
     val spark = stream.sparkSession
     // built at start, as `writeStream.format("json")` builds its sink: each
     // topic's directory and manifest exist before the first batch, so a
     // downstream app can bind to the topic right away
-    val sinks = split(stream).keys.map(topic => topic ->
-      new FileStreamSink(spark, s"$outDir/$topic", new JsonFileFormat, Nil, Map.empty)).toMap
+    val sinks = split(stream).keys.map(t => t -> Io.jsonFileSink(spark, s"$outDir/$t")).toMap
     stream.writeStream
       .option("checkpointLocation", s"$ckptDir/$name")
       .trigger(trigger)
@@ -235,8 +232,9 @@ object Mains {
           "dws_product_stats" ->
             streamJson(spark, inDir, "dws_product_stats", Wire.productStats(spark)))))
       case "base_db" =>
-        // facts → dynamic-topic dir, dims → keyed upsert stores: the composed
-        // router sink (CdcRouter.run) with the config re-read per micro-batch
+        // facts → manifest-committed dynamic-topic dir, dims → keyed upsert
+        // stores: the composed router sink (CdcRouter.run) with the config
+        // re-read per micro-batch
         val cdc = streamJson(spark, inDir, "ods_base_db_m", CdcRouter.envelopeSchema)
         Seq(CdcRouter.run(spark, cdc,
           () => spark.read.schema(CdcRouter.configSchema).json(s"$inDir/table_process"),

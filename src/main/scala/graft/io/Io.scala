@@ -1,6 +1,8 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
+import org.apache.spark.sql.execution.streaming.sinks.FileStreamSink
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -80,111 +82,184 @@ object Io {
       .option("kafka.bootstrap.servers", servers)
       .option("checkpointLocation", checkpoint)
 
-  /** File-backed dynamic-topic emulation used by tests: rows partitioned into
-    * one directory per topic — observable equivalent of per-topic delivery. */
-  def fileDynamicTopicSink(df: DataFrame, outDir: String, checkpoint: String): StreamingQuery =
-    df.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").partitionBy("topic").json(outDir)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+  /** The file binding of a topic: Spark's own file sink (the class
+    * `writeStream.format("json")` instantiates), one JSON file set per batch
+    * committed through the manifest `dir/_spark_metadata`. A batch id the
+    * manifest already holds is skipped, so a replayed micro-batch is written
+    * once; downstream file sources read the manifest, never a half-written
+    * batch. `partitionBy = Seq("topic")` is the file form of [[kafkaDynamicSink]]:
+    * one `dir/topic=<t>` directory per record topic. Build it at query start
+    * (the manifest then exists before the first batch) and call `addBatch`
+    * from foreachBatch. */
+  def jsonFileSink(spark: SparkSession, dir: String,
+                   partitionBy: Seq[String] = Nil): FileStreamSink =
+    new FileStreamSink(spark, dir, new JsonFileFormat, partitionBy, Map.empty)
 
-  /** A6/A7: idempotent dim upsert ("MERGE") into a parquet dim table keyed by
-    * `pk`: per micro-batch, last-writer-wins against existing rows AND within
-    * the batch (two CDC records for one key in a micro-batch keep only the
-    * latest by `orderCol`).
-    *
-    * Scale design: the store is laid out in `buckets` hash-buckets of the key
-    * (`path/__bucket=N/`), and a batch rewrites ONLY the buckets its keys
-    * fall in — write amplification is batch-proportional, not
-    * table-proportional, so the store survives a dim table 100× this size
-    * (raise `buckets` with table size). At cluster scale the same layout
-    * maps onto Delta/Iceberg MERGE with a bucketed table; the per-bucket
-    * rename-aside swap below is the single-process emulation of their commit.
-    * Read the store with [[readDim]] (drops the layout column). */
+  /** One store of an [[upsertDims]] merge: its directory and its key column. */
+  final case class DimStore(path: String, pk: String)
+
+  /** A6/A7: idempotent dim upsert ("MERGE") into the parquet dim store at
+    * `path`, keyed by `pk` — the one-store case of [[upsertDims]]: same
+    * layout, same last-writer-wins rule, same commit. */
   def upsertDim(spark: SparkSession, batch: DataFrame, path: String, pk: String,
                 orderCol: String, buckets: Int = 8): Unit = {
+    // cached here: a maintainer's batch is typically a join over the store
+    // itself, which the touched collect and the write then compute once. The
+    // cached frame is a derived plan, so the caller's own cache of `batch`
+    // is left alone
+    val one = batch.withColumn("__store_name", lit(path)).persist()
+    try upsertDims(spark, one, "__store_name", Map(path -> DimStore(path, pk)), orderCol, buckets)
+    finally one.unpersist()
+  }
+
+  /** Idempotent upsert of ONE batch into several dim stores at once: each row
+    * names its store in `storeCol` and is keyed by that store's `pk` column.
+    * Last-writer-wins against the stored rows (a batch row always replaces
+    * the stored row of its key) and within the batch (the latest `orderCol`
+    * wins; ties pick an arbitrary winner). The stores' files hold the batch's
+    * columns minus `storeCol`, plus any stored column the batch lacks; every
+    * store of one call therefore shares one file schema.
+    *
+    * Scale design: each store is laid out in hash-buckets of its key
+    * (`path/__bucket=N/`, N < the count in its `_buckets` marker), and a
+    * batch rewrites ONLY the buckets its keys fall in — write amplification
+    * is batch-proportional, not table-proportional (raise `buckets` with
+    * table size; [[rebucketDim]] migrates). The job count is fixed, whatever
+    * the number of stores and buckets: one collect of the touched
+    * (store, bucket) pairs (no shuffle), one schema read over the touched
+    * bucket dirs that exist, then one shuffle on (store, bucket) that merges
+    * the stored rows with the batch and dedups it (a `max_by` over
+    * (from-batch, orderCol)), and one write partitioned by (store, bucket) in
+    * at most `defaultParallelism` tasks — each bucket dir still gets exactly
+    * one file. Each bucket is then published with the checked rename-aside
+    * swap ([[swapDir]]), the single-process emulation of a Delta/Iceberg
+    * MERGE commit on a bucketed table; untouched buckets are never opened. A
+    * store gets its `_buckets` marker before its first bucket, and only when
+    * the batch has rows for it. Read a store with [[readDim]].
+    *
+    * The batch is computed twice, by the touched collect and by the write,
+    * so pass a cached or cheap lineage ([[graft.streaming.CdcRouter]] passes
+    * a slice of its cached micro-batch; [[upsertDim]] caches its batch). If
+    * the write's (store, bucket) dirs differ from the touched set, the
+    * lineage was not deterministic and the merge is refused before any
+    * bucket is published. */
+  def upsertDims(spark: SparkSession, batch: DataFrame, storeCol: String,
+                 stores: Map[String, DimStore], orderCol: String,
+                 buckets: Int = 8): Unit = {
     // orderCol is REQUIRED: "last writer" must be defined by an explicit
     // ordering column (e.g. the CDC envelope ts) — any positional fallback
     // (monotonically_increasing_id etc.) is partition-layout dependent and
     // nondeterministic after a shuffle.
-    // the bucket count is a LAYOUT property: once a store exists, its marker
-    // file wins over the parameter — an upsert with a different `buckets`
-    // would route existing keys to the wrong bucket and duplicate them
-    val markerPath = java.nio.file.Paths.get(path, "_buckets")
-    val storeDir = new java.io.File(path)
-    // refuse to upsert into a pre-bucket flat store: merging would miss the
-    // top-level files and silently duplicate keys — migrate loudly instead
-    if (!java.nio.file.Files.exists(markerPath) && storeDir.isDirectory &&
-        Option(storeDir.listFiles()).exists(_.exists(f =>
-          f.isFile && f.getName.endsWith(".parquet"))))
-      throw new IllegalStateException(
-        s"upsertDim: $path holds a flat (un-bucketed) store; migrate it first " +
-          "(read it, delete the dir, upsert the rows once) — merging in place would " +
-          "leave stale top-level rows next to bucketed ones")
-    val effectiveBuckets =
-      if (java.nio.file.Files.exists(markerPath))
-        java.nio.file.Files.readString(markerPath).trim.toInt
-      else {
-        // marker FIRST, buckets after: a crash between bucket writes then a
-        // retry with a different `buckets` value must not re-hash the keys
-        java.nio.file.Files.createDirectories(markerPath.getParent)
-        java.nio.file.Files.writeString(markerPath, buckets.toString)
-        buckets
-      }
-    // intra-batch last-writer-wins via max_by(struct), not a per-pk window
-    // (round-7 window audit): a CDC burst hammering ONE key — the classic
-    // hot-dim pathology — would sort every update of that key on a single
-    // reducer under Window.partitionBy(pk); max_by keeps one struct per key
-    // and collapses the burst map-side. Ties on orderCol pick an arbitrary
-    // winner, exactly as the row_number form did (same-timestamp CDC
-    // updates have no defined order either way).
-    val deduped = batch
-      .groupBy(col(pk))
-      .agg(max_by(struct(batch.columns.map(col): _*), col(orderCol)).as("__r"))
-      .select(col("__r.*"))
-      .withColumn("__bucket",
-        pmod(xxhash64(col(pk).cast("string")), lit(effectiveBuckets.toLong)))
-      .persist()
-    try {
-      val touched = deduped.select("__bucket").distinct().collect().map(_.getLong(0)).sorted
-      if (touched.nonEmpty) {
-        // ONE write job for ALL touched buckets (a per-bucket loop of write
-        // jobs serializes on the driver once a batch touches many buckets):
-        // read every touched bucket in one scan (basePath keeps the __bucket
-        // partition column so existing rows remember their bucket), merge
-        // once, and let partitionBy split the tmp output back into per-bucket
-        // dirs. repartition on __bucket puts each bucket's rows in a single
-        // task, so every bucket dir still holds exactly one file — the same
-        // layout the old per-bucket coalesce(1) produced. The publish step
-        // stays the per-bucket checked rename-aside (driver metadata ops, not
-        // Spark jobs); untouched buckets are never opened.
-        val existingDirs = touched.map(b => new java.io.File(s"$path/__bucket=$b"))
-          .filter(_.exists())
-        val merged =
-          if (existingDirs.isEmpty) deduped
-          else {
-            // mergeSchema: touched buckets may carry pre-widening schemas
-            val existing = spark.read
-              .option("mergeSchema", "true").option("basePath", path)
-              .parquet(existingDirs.map(_.getPath): _*)
-            existing.join(deduped, existing(pk) === deduped(pk), "left_anti")
-              .unionByName(deduped, allowMissingColumns = true)
-          }
-        val tmpRoot = new java.io.File(path, ".tmp_upsert")
-        if (tmpRoot.exists()) org.apache.commons.io.FileUtils.deleteDirectory(tmpRoot)
-        merged.repartition(touched.length, col("__bucket"))
-          .write.mode("overwrite").partitionBy("__bucket").parquet(tmpRoot.getPath)
-        touched.foreach { b =>
-          swapDir(new java.io.File(tmpRoot, s"__bucket=$b"),
-            new java.io.File(s"$path/__bucket=$b"))
+    val names = stores.keys.toSeq.sorted
+    val paths = names.map(stores(_).path)
+    val counts = paths.map(bucketCount(_, buckets))
+    // stores are numbered in name order: the number is the tmp layout's
+    // `__store` partition value, so store names need no path escaping
+    val store = col("__store")
+    val pks = names.map(stores(_).pk)
+    val key =
+      if (pks.distinct.size == 1) col(pks.head)
+      else coalesce(pks.zipWithIndex.map { case (pk, i) => when(store === i, col(pk)) }: _*)
+    val bucketOf = pmod(xxhash64(key.cast("string")),
+      element_at(typedLit(counts.map(_.toLong)), store + 1))
+    val keyed = batch
+      .withColumn("__store", element_at(typedLit(names.zipWithIndex.toMap), col(storeCol)))
+      .withColumn("__bucket", bucketOf)
+      .drop(storeCol)
+    // the touched (store, bucket) pairs: a per-partition distinct merged on
+    // the driver — one job and no shuffle, since a partition holds at most
+    // stores × buckets distinct pairs. A store outside the merge reads as -1
+    val touched = keyed.select("__store", "__bucket").queryExecution.toRdd
+      .mapPartitions(_.map(r => (if (r.isNullAt(0)) -1 else r.getInt(0), r.getLong(1))).toSet.iterator)
+      .collect().distinct.sorted.toSeq
+    require(touched.forall(_._1 >= 0),
+      s"upsertDims: batch rows name a store outside this merge (${names.mkString(", ")})")
+    if (touched.nonEmpty) {
+      def bucketDir(i: Int, b: Long) = new java.io.File(s"${paths(i)}/__bucket=$b")
+      val existing = touched.filter { case (i, b) => bucketDir(i, b).exists() }
+      val fresh = keyed.withColumn("__new", lit(true))
+      val all =
+        if (existing.isEmpty) fresh
+        else {
+          // mergeSchema: touched buckets may carry pre-widening schemas. One
+          // footer read for every store; each store is then read with that
+          // schema and its basePath, so stored rows keep their bucket
+          val schema = spark.read.option("mergeSchema", "true")
+            .parquet(existing.map { case (i, b) => bucketDir(i, b).getPath }: _*).schema
+          val stored = existing.groupBy(_._1).toSeq.sortBy(_._1).map { case (i, bs) =>
+            spark.read.schema(schema).option("basePath", paths(i))
+              .parquet(bs.map { case (_, b) => bucketDir(i, b).getPath }: _*)
+              .withColumn("__store", lit(i))
+          }.reduce(_ unionByName _)
+          fresh.unionByName(stored.withColumn("__new", lit(false)), allowMissingColumns = true)
         }
+      val dataCols = all.columns.filterNot(Set("__store", "__bucket", "__new"))
+      // ONE shuffle: repartitioning on (store, bucket) puts each bucket's rows
+      // — stored and fresh — in one task, which both satisfies the per-key
+      // aggregate (no second exchange) and makes the partitioned write
+      // produce exactly one file per bucket dir. max_by keeps one struct per
+      // key (a CDC burst on one hot key costs no sort)
+      val merged = all
+        .repartition(math.min(touched.size, spark.sparkContext.defaultParallelism),
+          store, col("__bucket"))
+        .groupBy(store, col("__bucket"), key.as("__key"))
+        .agg(max_by(struct(dataCols.map(col): _*), struct(col("__new"), col(orderCol))).as("__r"))
+        .select(col("__r.*"), store, col("__bucket"))
+      val tmpRoot = new java.io.File(paths(touched.head._1), ".tmp_upsert")
+      if (tmpRoot.exists()) org.apache.commons.io.FileUtils.deleteDirectory(tmpRoot)
+      merged.write.mode("overwrite").partitionBy("__store", "__bucket").parquet(tmpRoot.getPath)
+      // the write recomputed the batch: a bucket it produced outside the
+      // touched set would be published without its stored rows, and a
+      // touched bucket it missed would fail mid-publish — refuse before any
+      // swap
+      def subDirs(d: java.io.File, prefix: String): Seq[(String, java.io.File)] =
+        Option(d.listFiles()).toSeq.flatten
+          .filter(f => f.isDirectory && f.getName.startsWith(prefix))
+          .map(f => f.getName.stripPrefix(prefix) -> f)
+      val written = (for {
+        (i, s) <- subDirs(tmpRoot, "__store=")
+        (b, _) <- subDirs(s, "__bucket=")
+      } yield (i.toInt, b.toLong)).sorted
+      if (written != touched) {
         org.apache.commons.io.FileUtils.deleteDirectory(tmpRoot)
+        throw new IllegalStateException(
+          s"upsertDims: the write produced (store, bucket) dirs ${written.mkString(" ")} " +
+            s"but the batch touched ${touched.mkString(" ")} — the batch lineage is not " +
+            "deterministic (cache it); nothing was published")
       }
-    } finally deduped.unpersist()
-    ()
+      // marker FIRST, buckets after: a crash between bucket publishes then a
+      // retry with a different `buckets` value must not re-hash the keys
+      touched.map(_._1).distinct.foreach { i =>
+        val marker = java.nio.file.Paths.get(paths(i), "_buckets")
+        if (!java.nio.file.Files.exists(marker)) {
+          java.nio.file.Files.createDirectories(marker.getParent)
+          java.nio.file.Files.writeString(marker, counts(i).toString)
+        }
+      }
+      touched.foreach { case (i, b) =>
+        swapDir(new java.io.File(tmpRoot, s"__store=$i/__bucket=$b"), bucketDir(i, b))
+      }
+      org.apache.commons.io.FileUtils.deleteDirectory(tmpRoot)
+    }
+  }
+
+  /** The bucket count of the store at `path`. The count is a LAYOUT
+    * property: once a store exists, its marker wins over `default` — an
+    * upsert with a different count would route existing keys to the wrong
+    * bucket and duplicate them. Refuses a pre-bucket flat store: merging
+    * would miss its top-level files and silently duplicate keys. */
+  private def bucketCount(path: String, default: Int): Int = {
+    val marker = java.nio.file.Paths.get(path, "_buckets")
+    if (java.nio.file.Files.exists(marker)) java.nio.file.Files.readString(marker).trim.toInt
+    else {
+      if (Option(new java.io.File(path).listFiles()).exists(_.exists(f =>
+          f.isFile && f.getName.endsWith(".parquet"))))
+        throw new IllegalStateException(
+          s"upsertDim: $path holds a flat (un-bucketed) store; migrate it first " +
+            "(read it, delete the dir, upsert the rows once) — merging in place would " +
+            "leave stale top-level rows next to bucketed ones")
+      default
+    }
   }
 
   /** Read a dim store written by [[upsertDim]] (hides the bucket layout).

@@ -1,7 +1,9 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import graft.io.Io
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -21,8 +23,13 @@ import org.apache.spark.sql.types._
   *    per micro-batch inside foreachBatch — same freshness at trigger cadence,
   *    no extra thread.
   *
-  * Scale: the config table is tiny → broadcast join, no shuffle on the CDC
-  * stream; dim upserts shuffle only each table's slice of the batch.
+  * Scale: the config table is tiny → collected once per batch and broadcast
+  * from the driver, no shuffle on the CDC stream. Every dim table of the
+  * batch is upserted in ONE [[Io.upsertDims]] merge, so a micro-batch runs a
+  * fixed number of Spark jobs, however many dim tables the config names.
+  * Facts commit through the file-sink manifest ([[Io.jsonFileSink]]), so a
+  * batch replayed after its fact write adds no fact twice; the dim upsert is
+  * idempotent on replay by itself.
   */
 object CdcRouter {
 
@@ -71,26 +78,47 @@ object CdcRouter {
         col("kv_pruned"), col("ts"))
   }
 
-  /** End-to-end streaming router: facts → dynamic-topic sink dir, dims →
-    * per-table parquet upsert stores under `dimDir`. `configProvider` is
-    * re-invoked every micro-batch (the 5 s Timer equivalent). */
+  /** The dim stores the config rows name: sink_table → `dimDir/<sink_table>`
+    * keyed by its sink_pk (`id` when unset, as in [[route]]). One store has
+    * one key column, so a table whose config rows name two sink_pks is
+    * refused. */
+  private def dimStores(config: Seq[Row], dimDir: String): Map[String, Io.DimStore] =
+    config.filter(_.getAs[String]("sink_type") == "hbase")
+      .groupBy(_.getAs[String]("sink_table"))
+      .map { case (table, rows) =>
+        val pks = rows.map(r => Option(r.getAs[String]("sink_pk")).getOrElse("id")).distinct.sorted
+        if (pks.size > 1)
+          throw new IllegalArgumentException(
+            s"CdcRouter: dim table $table is configured with sink_pk ${pks.mkString(" and ")}; " +
+              "its config rows must name one key column")
+        table -> Io.DimStore(s"$dimDir/$table", pks.head)
+      }
+
+  /** End-to-end streaming router: facts → the dynamic-topic sink dir
+    * `factDir/topic=<t>`, dims → per-table parquet upsert stores under
+    * `dimDir` (their files hold one key column per distinct dim sink_pk of
+    * the config, `value` and `ts`). `configProvider` is re-invoked every
+    * micro-batch (the 5 s Timer equivalent). */
   def run(spark: SparkSession, cdc: DataFrame, configProvider: () => DataFrame,
-          factDir: String, dimDir: String, checkpoint: String): StreamingQuery =
+          factDir: String, dimDir: String, checkpoint: String): StreamingQuery = {
+    val facts = Io.jsonFileSink(spark, factDir, Seq("topic"))
     cdc.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val routed = route(validRecords(batch), configProvider()).cache()
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val configRead = configProvider()
+        val config = configRead.collect().toSeq
+        val dims = dimStores(config, dimDir)
+        val routed = route(validRecords(batch),
+          spark.createDataFrame(config.asJava, configRead.schema)).cache()
         try {
-          routed.filter(col("sink_type") === "kafka")
-            .select("topic", "value")
-            .write.mode("append").partitionBy("topic").json(factDir)
-          val dims = routed.filter(col("sink_type") === "hbase")
-          val tables = dims.select("sink_table", "sink_pk").distinct().collect()
-          tables.foreach { r =>
-            val (tbl, pk) = (r.getString(0), r.getString(1))
-            val slice = dims.filter(col("sink_table") === tbl)
-              .select(col("kv_pruned")(pk).as(pk), col("value"), col("ts"))
+          facts.addBatch(batchId,
+            routed.filter(col("sink_type") === "kafka").select("topic", "value"))
+          if (dims.nonEmpty) {
+            val keys = dims.values.map(_.pk).toSeq.distinct.sorted
+            val rows = routed.filter(col("sink_type") === "hbase").select(col("sink_table") +:
+              keys.map(k => when(col("sink_pk") === k, col("kv_pruned")(k)).as(k)) :+
+              col("value") :+ col("ts"): _*)
             // envelope ts orders same-key records within the batch (last wins)
-            Io.upsertDim(spark, slice, s"$dimDir/$tbl", pk, orderCol = "ts")
+            Io.upsertDims(spark, rows, "sink_table", dims, orderCol = "ts")
           }
         } finally routed.unpersist()
         ()
@@ -98,4 +126,5 @@ object CdcRouter {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .start()
+  }
 }

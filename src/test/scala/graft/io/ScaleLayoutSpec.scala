@@ -188,6 +188,26 @@ class ScaleLayoutSpec extends SparkSuite {
     assert(rows.size == 40 && rows("7") == "w7" && rows("40") == "w40")
   }
 
+  test("upsertDims refuses, before any publish, a write whose buckets differ from the touched set") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("dim-lineage").toString + "/store"
+    def bucket(k: String) = spark.sql(s"select pmod(xxhash64('$k'), 8L)").head.getLong(0)
+    val (first, second) = ("1", (2 to 20).map(_.toString).find(k => bucket(k) != bucket("1")).get)
+    // an uncached, nondeterministic lineage: the touched collect sees `first`,
+    // the write recomputes the batch and sees `second`
+    ScaleLayoutSpec.calls.set(0)
+    val flip = udf(() => if (ScaleLayoutSpec.calls.getAndIncrement() == 0) first else second)
+      .asNondeterministic()
+    val batch = Seq(("v", 1L)).toDF("value", "ts")
+      .select(lit("s").as("store"), flip().as("id"), col("value"), col("ts"))
+    val err = intercept[IllegalStateException] {
+      Io.upsertDims(spark, batch, "store", Map("s" -> Io.DimStore(dir, "id")), "ts")
+    }
+    assert(err.getMessage.contains("not deterministic"), err.getMessage)
+    val left = Option(new java.io.File(dir).list()).toSeq.flatten
+    assert(left.isEmpty, s"no bucket, no marker and no tmp left behind: $left")
+  }
+
   test("orcSource round-trips batch and streaming (native second columnar format)") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("orc-src").toString + "/t"
@@ -238,4 +258,8 @@ class ScaleLayoutSpec extends SparkSuite {
       spark.sql("DROP TABLE IF EXISTS lineitem_b")
     }
   }
+}
+
+object ScaleLayoutSpec {
+  val calls = new java.util.concurrent.atomic.AtomicInteger()
 }
