@@ -38,7 +38,9 @@ object PlanRounds {
         spark.listenerManager.register(listener)
         try {
           fn(spark, dir).count()
-          Thread.sleep(3000) // the listener bus fires asynchronously
+          // the listener bus fires asynchronously: drain it so no late plan
+          // is dropped
+          org.apache.spark.ListenerBusDrain(spark.sparkContext)
         } finally spark.listenerManager.unregister(listener)
         import scala.jdk.CollectionConverters._
         val body = plans.asScala.zipWithIndex

@@ -239,7 +239,7 @@ object Mains {
         Seq(CdcRouter.run(spark, cdc,
           () => spark.read.schema(CdcRouter.configSchema).json(s"$inDir/table_process"),
           factDir = s"$outDir/kafka_facts", dimDir = s"$outDir/hbase_dims",
-          checkpoint = s"$ckptDir/base_db"))
+          checkpoint = s"$ckptDir/base_db", trigger = trigger))
       case other =>
         throw new IllegalArgumentException(
           s"unknown app '$other' — one of: ${appNames.mkString(", ")}")

@@ -33,8 +33,8 @@ import org.apache.spark.sql.types._
   *    the fat transient columns (text, embedding) never reach the database.
   *
   * Kill-mid-stream/restart with no duplicate admissions is spec-gated
-  * (StreamingCurationSpec); throughput is measured in Microbench with the
-  * other streaming shapes (PLANS.md).
+  * (StreamingCurationSpec); its round-7 throughput (18k rows/s composed)
+  * is recorded with the other streaming shapes in PLANS.md.
   *
   * A domain-relevance gate composes the same way and is wired as [[admit]]'s
   * optional `dsir` parameter: train [[graft.operators.TextOps.dsirRatios]] on
@@ -111,8 +111,8 @@ object StreamingCuration {
     // (build.sbt keeps the main library Spark-only): spark-submit --jars
     // duckdb_jdbc.jar in production, `sbt Test/runMain` in-container (the
     // test classpath carries the driver). Io.connect survives the --jars
-    // child-classloader shape (JdbcSinkSpec). Smoke-verified end-to-end
-    // against sf0.001 stores: exact dups rejected, gate-passing admitted
+    // child-classloader shape (JdbcSinkSpec). Run end-to-end against
+    // sf0.001 stores in round 7: exact dups rejected, gate-passing admitted
     // once, schema lands transient-free (NOTES_r7.md).
     require(args.length >= 4,
       "usage: graft.apps.StreamingCuration <streamInDir> <storeSfDir> <duckdbPath> <ckptDir>")

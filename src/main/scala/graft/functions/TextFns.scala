@@ -726,5 +726,4 @@ object TextFns {
     when(size(toks) === 0, 0.0)
       .otherwise(markerCt(toks, StopwordsEn).cast("double") / size(toks))
 
-  def stopwordRatioCol(text: Column): Column = stopwordRatioFromToks(tokensCol(text))
 }

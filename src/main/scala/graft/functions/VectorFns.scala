@@ -19,14 +19,6 @@ object VectorFns {
       lit(0.0),
       (acc, v) => acc + v)
 
-  def normSqCol(a: Column): Column =
-    aggregate(transform(a, x => x.cast("double") * x.cast("double")), lit(0.0), (acc, v) => acc + v)
-
-  def normCol(a: Column): Column = sqrt(normSqCol(a))
-
-  def cosineCol(a: Column, b: Column): Column =
-    dotCol(a, b) / (normCol(a) * normCol(b))
-
   // ---- codegen'd fast path (graft.plans.DotProductF; register first) ----
 
   /** Requires VectorExpressions.register(spark) (or the GraftExtensions

@@ -52,10 +52,6 @@ object Io {
         throw new IllegalArgumentException("streaming ORC needs an explicit schema"))).orc(dir)
     else schema.fold(spark.read.orc(dir))(s => spark.read.schema(s).orc(dir))
 
-  /** A9: parse a raw (key, value) stream into typed columns. */
-  def parseJson(raw: DataFrame, schema: StructType): DataFrame =
-    raw.select(from_json(col("value"), schema).as("j")).select("j.*")
-
   // ---------------- sinks ----------------
 
   /** Row → JSON `value` column, the wire encoding every topic edge uses
@@ -388,19 +384,6 @@ object Io {
   def writeBucketed(df: DataFrame, table: String, bucketCol: String, buckets: Int): Unit =
     df.write.mode("overwrite").bucketBy(buckets, bucketCol)
       .sortBy(bucketCol).format("parquet").saveAsTable(table)
-
-  /** A5: JDBC-ish batch sink shape — foreachBatch with transient-column drop,
-    * bound to parquet here; [[jdbcStatsSink]] is the same shape landing in a
-    * real JDBC database. */
-  def statsSink(df: DataFrame, outDir: String, checkpoint: String,
-                transientCols: Seq[String] = Nil): StreamingQuery =
-    df.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.drop(transientCols: _*).write.mode("append").parquet(outDir)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
 
   /** A5, REAL JDBC execution (reference `utils/ClickHouseUtil.java:31-76`,
     * used by every DWS app e.g. `VisitorStatsApp.java:202`): foreachBatch →

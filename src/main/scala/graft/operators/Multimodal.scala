@@ -30,15 +30,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** Canonical multimodal record schema: payload + typed metadata. */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("payload", BinaryType),
-    StructField("media_type", StringType), // "image" | "audio" | "video"
-    StructField("meta", StructType(Seq(
-      StructField("declared_format", StringType),
-      StructField("n_bytes", LongType))))))
-
   /** Unified decoded-media schema: per-modality metadata columns are null for
     * the other modalities; `feature` is the modality's embedding-ready vector. */
   val decodedSchema: StructType = StructType(Seq(

@@ -268,9 +268,9 @@ object Relational {
     * join then matches this one bit-for-bit while the hot partition splits
     * at runtime (AdaptiveScaleSpec "q53 crossover"). Salting remains the
     * answer when thresholds can't be tuned per-query, the skew sits below
-    * AQE's byte thresholds (Microbench round-6: an 80 MB hot partition
-    * sails under the 256 MB default untouched), or a downstream op consumes
-    * the join's partitioning. */
+    * AQE's byte thresholds (round 6, PLANS.md skew table: an 80 MB hot
+    * partition sails under the 256 MB default untouched), or a downstream
+    * op consumes the join's partitioning. */
   def saltedJoin(spark: SparkSession, dir: String, salts: Int = 8): DataFrame = {
     val l = t(spark, dir, "lineitem")
       // project to the 3 consumed columns BEFORE the salt/exchange (guide
@@ -3390,7 +3390,7 @@ object Relational {
     * ad-hoc slice union (type IN (...), date range) is answerable from the
     * stored partials without touching the corpus.
     *
-    * Measured crossover (MicrobenchRollup, PLANS.md): at sf0.1 the cube
+    * Measured crossover (PLANS.md, round-10 lattice table): at sf0.1 the cube
     * pass WINS (0.39 s vs 0.96 s) — leaves hold ~107 users < k, so the
     * KMV forward bound never binds and the hashing is pure overhead. The
     * sketch's regime is users-per-leaf ≫ k, where cube's expand (node
@@ -3506,11 +3506,9 @@ object Relational {
     * Cells are ADDITIVE LONGS ⇒ the streaming twin maintains them with the
     * shared EpochStore merge. */
   /** The Carter–Wegman affine family's modulus (largest prime < 2⁵²) and
-    * per-row 52-bit md5 digest — private[graft] so MicrobenchBootstrap
-    * decomposes the REAL production expressions, not a copy that can
-    * drift. */
-  private[graft] val bootstrapP = 4503599627370449L
-  private[graft] def bootstrapH52(tag: String): Column =
+    * per-row 52-bit md5 digest. */
+  private val bootstrapP = 4503599627370449L
+  private def bootstrapH52(tag: String): Column =
     conv(substring(md5(concat(lit(tag),
       col("okey").cast("string")).cast("binary")), 1, 13), 16, 10).cast("long")
 
@@ -3537,7 +3535,7 @@ object Relational {
     // 9-deep when-chain each, 66 aggregate expressions) blows the
     // generated projection past the JIT compile threshold and the hot
     // loop runs interpreted: measured 5.2 s for the weight stage at
-    // sf0.1 vs 0.6 s for this shape (MicrobenchBootstrap; branch-free
+    // sf0.1 vs 0.6 s for this shape (round 16, NOTES_r16.md; branch-free
     // casts instead of when-chains changed nothing — it is code SIZE,
     // not branching). The explode multiplies the in-pipeline row stream
     // ×(reps+1) but adds NO scan (the old "explode pays a ×reps scan"

@@ -1311,76 +1311,33 @@ object TextOps {
     // EXACT interpolated percentile: correct for the oracle, but its
     // aggregation buffer holds every distinct avg_q of the corpus in one
     // place — at 100 TB that single global-cutoff buffer is a memory bomb.
-    // The production path is [[perplexityBucketsApprox]] (bounded-memory
-    // mergeable sketch); switch over when the distinct score count stops
-    // fitting one aggregation buffer (≳10⁷ distinct values).
+    // Switch the two cutoffs to `approx_percentile` (a mergeable
+    // bounded-memory sketch, rank error ≤ 1/accuracy) when the distinct
+    // score count stops fitting one aggregation buffer (≳10⁷ distinct
+    // values); only a ~1/accuracy rank band of docs near each cutoff can
+    // then flip bucket (≥99% agreement at accuracy=10000 in round 6,
+    // NOTES_r6.md §3, PLANS.md). DuckDB has no matching sketch, so this
+    // exact form carries the oracle.
     val cuts = withAvg.filter(col("n_bigrams") > 0)
       .agg(expr("percentile(avg_q, 1.0/3)").as("c33"),
         expr("percentile(avg_q, 2.0/3)").as("c67"))
     perplexityBucketize(withAvg, cuts)
   }
 
-  /** 100 TB fallback for [[perplexityBuckets]]'s global tercile cutoffs:
-    * `approx_percentile` (a mergeable bounded-memory quantile sketch with
-    * rank error ≤ 1/accuracy) replaces the exact `percentile` whose buffer
-    * materializes every distinct score on one executor. Only the two cutoff
-    * scalars change — the LM scoring pipeline is byte-identical — so at most
-    * a ~1/accuracy rank-band of docs near each cutoff can flip bucket.
-    * Spec-gated (TextOpsSpec): ≥99% bucket agreement with the exact version
-    * at accuracy=10000, and every disagreeing doc's score lies within the
-    * exact c33/c67 neighborhood. Not oracled: DuckDB has no matching sketch
-    * (the A25 divergence pattern — exact twin q92 carries the oracle). */
-  def perplexityBucketsApprox(spark: SparkSession, dir: String,
-                              accuracy: Int = 10000): DataFrame = {
-    val withAvg = perplexityScored(spark, dir)
-    val cuts = withAvg.filter(col("n_bigrams") > 0)
-      .agg(expr(s"approx_percentile(avg_q, 1.0/3, $accuracy)").as("c33"),
-        expr(s"approx_percentile(avg_q, 2.0/3, $accuracy)").as("c67"))
-    perplexityBucketize(withAvg, cuts)
-  }
-
-  /** Pruned-vocabulary LM variant of [[perplexityBuckets]] — the FULL 100 TB
-    * shape of q92, combining both scale fixes: the bigram LM is pruned to
-    * the `c12 ≥ minCount` head before broadcast (CCNet trains its reference
-    * LM on a fixed head vocabulary for exactly this reason — at web scale
-    * bigram types run into the billions) with a zero backoff for pruned
-    * bigrams (the floor of any backoff scheme; the tf still counts in the
-    * denominator, so pruning can only LOWER a doc's average — monotonicity
-    * the spec pins exactly), and the tercile cutoffs come from
-    * `approx_percentile`. Unlike [[bigramFluencyPruned]] this is an
-    * approximation — the LM uses the probability VALUES, not just a rarity
-    * threshold — so it is tolerance-gated (TextOpsSpec: per-doc monotone
-    * scores, ≥90% bucket agreement at minCount=2 on the fixture), not
-    * oracled; exact twin q92 carries the oracle. */
-  def perplexityBucketsPruned(spark: SparkSession, dir: String,
-                              minCount: Long = 2, accuracy: Int = 10000): DataFrame = {
-    val withAvg = perplexityScored(spark, dir, minCount)
-    val cuts = withAvg.filter(col("n_bigrams") > 0)
-      .agg(expr(s"approx_percentile(avg_q, 1.0/3, $accuracy)").as("c33"),
-        expr(s"approx_percentile(avg_q, 2.0/3, $accuracy)").as("c67"))
-    perplexityBucketize(withAvg, cuts)
-  }
-
   /** Shared LM-scoring core of q92: tf-weighted integer-quantized bigram
     * probabilities, one left join back to all docs, avg score per doc.
-    * `minCount` prunes the LM to the `c12 ≥ minCount` head (zero backoff
-    * for pruned bigrams); 1 = exact — every (doc, bigram) matches the
-    * corpus table by construction, so the left join degenerates to the
-    * inner join and the coalesced backoff never fires. */
-  private def perplexityScored(spark: SparkSession, dir: String,
-                               minCount: Long = 1): DataFrame = {
+    * Every (doc, bigram) matches the corpus table by construction, so the
+    * bigram left join degenerates to the inner join and the coalesced zero
+    * never fires. */
+  private def perplexityScored(spark: SparkSession, dir: String): DataFrame = {
     val d = docs(spark, dir)
     val grams = d.select(col("doc_id"), explode(gramCountsUdf(2)(col("text"))))
       .select(col("doc_id"), col("key").as("gram"), col("value").cast("long").as("tf"))
-    val corpusAll = grams.groupBy("gram").agg(sum(col("tf")).as("c12"))
+    val corpus = grams.groupBy("gram").agg(sum(col("tf")).as("c12"))
       .withColumn("w1", expr("substring_index(gram, ' ', 1)"))
-    // marginals from the UNPRUNED counts: pruning the table must not
-    // redistribute the denominator mass (p(w2|w1) stays a true probability)
-    val marg = corpusAll.groupBy("w1").agg(sum(col("c12")).as("c1"))
-    val corpus = if (minCount > 1) corpusAll.filter(col("c12") >= minCount) else corpusAll
+    val marg = corpus.groupBy("w1").agg(sum(col("c12")).as("c1"))
     val scored = grams
-      // grams derives its own prefix key: corpus's w1 can be null on the
-      // pruned left join, and reusing it would make the marg join ambiguous
+      // grams derives its own prefix key, so the marg join is unambiguous
       .withColumn("gw1", expr("substring_index(gram, ' ', 1)"))
       .join(broadcast(corpus.drop("w1")), Seq("gram"), "left")
       .join(broadcast(marg.withColumnRenamed("w1", "mw1")),
@@ -2421,9 +2378,18 @@ object TextOps {
     * docs quality-first — accept-band docs (30–400 tokens, stop_ratio ≤ 0.5,
     * the [[qualityScore]] band) ahead of the rest, longer first, id tiebreak
     * — and keep the top `cap`. One shuffle on source + a per-group window.
-    * At 100 TB the window swaps for the k-bounded
-    * [[graft.functions.Aggregators.topK]] partial agg exactly as q14 does
-    * (same output, O(sources·cap·mappers) shuffled instead of O(rows)). */
+    *
+    * Window vs topK: the window shuffles and sorts EVERY row of a source
+    * onto one reducer, and a corpus has few, huge sources. The k-bounded
+    * [[graft.functions.Aggregators.topK]] partial agg (the q14 machinery)
+    * gives the same rows with O(sources·cap·mappers) shuffled instead of
+    * O(rows) sorted. Measured at sf0.1 (round 7, NOTES_r7.md §3 and PLANS.md
+    * round-7 section): window 0.199 s vs topK 0.257 s — the window wins by
+    * ~30% while every source fits one reducer, because the UDAF's kryo
+    * buffer costs more than the sort saves. The crossover is where a single
+    * source outgrows one reducer's sort (spill territory); past it, encode
+    * the (good DESC, token_ct DESC, doc_id ASC) order as topK's
+    * (v DESC, id ASC) with v = good·2³² + token_ct. */
   def sourceQuota(spark: SparkSession, dir: String, cap: Int = 15): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("source")
@@ -2438,41 +2404,6 @@ object TextOps {
       .select(col("doc_id"), col("source"), col("token_ct").cast("long").as("token_ct"),
         col("rnk"))
   }
-
-  /** The k-bounded form of [[sourceQuota]] — the 100 TB shape (round-7
-    * VERDICT #3, the q14 machinery): the per-source window above shuffles
-    * and sorts EVERY row of a source onto one reducer, and a corpus has
-    * few, huge sources. [[graft.functions.Aggregators.topK]] partially
-    * aggregates a k-bounded buffer map-side, so each mapper forwards at
-    * most `cap` rows per source it saw — shuffled bytes drop from O(rows)
-    * to O(sources·cap·mappers) and nothing is ever fully sorted. The
-    * window's (good DESC, token_ct DESC, doc_id ASC) order is encoded into
-    * topK's (v DESC, id ASC) contract as v = good·2³² + token_ct (both
-    * integers exact in a double far beyond any real token count); rnk =
-    * position in the returned array. Row-for-row equality with the window
-    * form is spec-gated (TextOpsSpec).
-    *
-    * Switchover (Microbench, sf0.1): window 0.199 s vs topK 0.257 s — at
-    * fixture scale the window wins by ~30%, because every source fits one
-    * reducer comfortably and the UDAF's kryo buffer costs more than the
-    * sort saves. The crossover is where a single source outgrows one
-    * reducer's sort (spill territory, O(rows) shuffled vs this form's
-    * O(sources·cap·mappers)), which is why q80 stays on the window at
-    * bench scale and THIS form is the one a cluster deployment binds. */
-  def sourceQuotaTopK(spark: SparkSession, dir: String, cap: Int = 15): DataFrame =
-    docs(spark, dir)
-      .withColumn("toks", tokensCol(col("text")))
-      .withColumn("token_ct", size(col("toks")))
-      .withColumn("good",
-        col("token_ct").between(30, 400) && stopwordRatioFromToks(col("toks")) <= lit(0.5))
-      .withColumn("v",
-        when(col("good"), lit(4294967296.0)).otherwise(lit(0.0)) + col("token_ct"))
-      .groupBy("source")
-      .agg(graft.functions.Aggregators.topK(
-        cap, col("v"), col("doc_id"), col("token_ct").cast("long")).as("top"))
-      .select(col("source"), posexplode(col("top")))
-      .select(col("col.id").as("doc_id"), col("source"),
-        col("col.p").as("token_ct"), (col("pos") + 1).cast("int").as("rnk"))
 
   /** Token-budget mixture sampling (Pile/DoReMi-style data mixing): every
     * source gets the same token budget; docs are drawn in md5(doc_id)-rank
@@ -2496,8 +2427,8 @@ object TextOps {
     * wrong answer. Row-for-row equality with the windowed form is
     * spec-gated (TextOpsSpec); the stats/check collects are per-source —
     * bounded control-plane, like the quantizer samples. Cost at fixture
-    * scale (Microbench, sf0.1): 0.275 s vs the windowed form's 0.190 s —
-    * the stats+check passes cost ~85 ms where every source fits one
+    * scale (sf0.1, PLANS.md round-7 section): 0.275 s vs the windowed
+    * form's 0.190 s — the stats+check passes cost ~85 ms where every source fits one
     * reducer anyway; at a billion-row source the windowed form sorts the
     * whole source on one task and this form windows a few thousand rows.
     *

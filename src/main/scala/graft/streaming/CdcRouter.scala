@@ -98,9 +98,11 @@ object CdcRouter {
     * `factDir/topic=<t>`, dims → per-table parquet upsert stores under
     * `dimDir` (their files hold one key column per distinct dim sink_pk of
     * the config, `value` and `ts`). `configProvider` is re-invoked every
-    * micro-batch (the 5 s Timer equivalent). */
+    * micro-batch (the 5 s Timer equivalent). The default trigger drains what
+    * is present and stops; a 24×7 deployment passes a processing-time one. */
   def run(spark: SparkSession, cdc: DataFrame, configProvider: () => DataFrame,
-          factDir: String, dimDir: String, checkpoint: String): StreamingQuery = {
+          factDir: String, dimDir: String, checkpoint: String,
+          trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val facts = Io.jsonFileSink(spark, factDir, Seq("topic"))
     cdc.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -124,7 +126,7 @@ object CdcRouter {
         ()
       }
       .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
+      .trigger(trigger)
       .start()
   }
 }

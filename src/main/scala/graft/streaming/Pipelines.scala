@@ -115,11 +115,11 @@ object Pipelines {
     * equi-join whose time band bounds both sides' state; watermarks let Spark
     * evict join state exactly like Flink's interval-join buffers. */
   def orderWide(info: Dataset[OrderInfo], detail: Dataset[OrderDetail],
-                slackMillis: Long = 5L, joinType: String = "inner",
-                wmDelay: String = "3 seconds"): DataFrame = {
-    // wmDelay is the state knob: join state holds every row within the
-    // watermark delay of the stream head, so state size = delay × input
-    // rate. Microbench sweeps it (3 s vs 30 s = 10× state) per provider.
+                slackMillis: Long = 5L, joinType: String = "inner"): DataFrame = {
+    // join state holds every row within the watermark delay of the stream
+    // head, so state size = delay × input rate (30 s held exactly 10× the
+    // rows of 3 s in the round-7 sweep: PLANS.md provider table, NOTES_r7.md)
+    val wmDelay = "3 seconds"
     val i = info.toDF()
       .withColumn("i_time", timestamp_millis(col("create_ts")))
       .withWatermark("i_time", wmDelay)

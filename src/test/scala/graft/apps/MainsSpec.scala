@@ -335,6 +335,32 @@ class MainsSpec extends SparkSuite {
       "restart applied only the new update; key still single-rowed")
   }
 
+  test("base_db follows Mains.start's trigger: a processing-time run stays up after its backlog") {
+    val inDir = tmp("dbt-in"); val outDir = tmp("dbt-out"); val ckptDir = tmp("dbt-ckpt")
+    val cdc = new java.io.File(s"$inDir/ods_base_db_m"); cdc.mkdirs()
+    val cfg = new java.io.File(s"$inDir/table_process"); cfg.mkdirs()
+    Files.write(new java.io.File(cdc, "b1.jsonl").toPath, java.util.Arrays.asList(
+      """{"database":"gmall","table":"order_info","type":"insert","ts":1,"data":"{\"id\":\"1\",\"user_id\":\"7\",\"total_amount\":\"9.9\"}"}"""))
+    Files.write(new java.io.File(cfg, "cfg.jsonl").toPath, java.util.Arrays.asList(
+      """{"source_table":"order_info","operate_type":"insert","sink_type":"kafka","sink_table":"dwd_order_info","sink_columns":"id,user_id,total_amount"}"""))
+    val qs = Mains.start(spark, "base_db", inDir, outDir, ckptDir,
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 hour"))
+    try {
+      assert(qs.size == 1)
+      val q = qs.head
+      // processAllAvailable() would wait for the next trigger, an hour away:
+      // wait for the first batch's progress instead
+      val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
+      while (q.lastProgress == null && q.isActive && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(q.lastProgress != null && q.lastProgress.numInputRows == 1, "the backlog ran as batch 0")
+      assert(!q.awaitTermination(5000),
+        "a processing-time base_db keeps running after its backlog (AvailableNow would exit)")
+      val facts = spark.read.json(s"$outDir/kafka_facts")
+      assert(facts.filter(col("topic") === "dwd_order_info").count() == 1,
+        "the backlog's fact is written by the first trigger")
+    } finally qs.foreach(_.stop())
+  }
+
   test("order_wide → payment_wide chain runs file-bound with derived wire schemas") {
     val inDir = tmp("ow-in"); val outDir = tmp("ow-out"); val ckptDir = tmp("ow-ckpt")
     def writeTopic(topic: String, lines: String*): Unit = {

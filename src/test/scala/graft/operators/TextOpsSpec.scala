@@ -328,49 +328,6 @@ class TextOpsSpec extends SparkSuite {
     }
   }
 
-  test("perplexityBucketsApprox: >=99% bucket agreement with exact cutoffs, disagreements only adjacent") {
-    import spark.implicits._
-    val exact = TextOps.perplexityBuckets(spark, sf001)
-      .select(col("doc_id"), col("bucket").as("b_exact"))
-    val approx = TextOps.perplexityBucketsApprox(spark, sf001)
-      .select(col("doc_id"), col("bucket").as("b_approx"))
-    val joined = exact.join(approx, "doc_id")
-      .select($"doc_id", $"b_exact", $"b_approx").as[(Long, String, String)].collect()
-    val n = joined.length
-    val disagree = joined.filter(r => r._2 != r._3)
-    assert(n > 0 && disagree.length <= n / 100,
-      s"${disagree.length}/$n docs flipped bucket — sketch rank error must stay within 1/accuracy")
-    // a 1/accuracy rank error can only move a cutoff past adjacent docs,
-    // never across a whole tercile
-    disagree.foreach { case (id, e, a) =>
-      val pair = Set(e, a)
-      assert(pair == Set("head", "middle") || pair == Set("middle", "tail"),
-        s"doc $id flipped non-adjacent buckets: $e -> $a")
-    }
-  }
-
-  test("perplexityBucketsPruned: scores monotone under pruning, buckets mostly agree") {
-    import spark.implicits._
-    val exact = TextOps.perplexityBuckets(spark, sf001)
-      .select($"doc_id", $"score_sum".as("s_exact"), $"n_bigrams".as("n_exact"),
-        $"bucket".as("b_exact"))
-    val pruned = TextOps.perplexityBucketsPruned(spark, sf001, minCount = 2)
-      .select($"doc_id", $"score_sum".as("s_pruned"), $"n_bigrams".as("n_pruned"),
-        $"bucket".as("b_pruned"))
-    val joined = exact.join(pruned, "doc_id").collect()
-    assert(joined.nonEmpty)
-    joined.foreach { r =>
-      // zero backoff can only REMOVE probability mass, never add or move it
-      assert(r.getAs[Long]("n_pruned") == r.getAs[Long]("n_exact"),
-        s"doc ${r.getLong(0)}: tf denominator must not change under pruning")
-      assert(r.getAs[Long]("s_pruned") <= r.getAs[Long]("s_exact"),
-        s"doc ${r.getLong(0)}: pruned LM score must be <= exact")
-    }
-    val agree = joined.count(r => r.getAs[String]("b_exact") == r.getAs[String]("b_pruned"))
-    assert(agree >= joined.length * 9 / 10,
-      s"bucket agreement $agree/${joined.length} below 90% at minCount=2")
-  }
-
   test("bigramFluencyPruned: a minCount violating the lossless precondition raises, never mis-scores") {
     // sf0.001's corpus has far fewer than (10^7-1)*1000 bigram occurrences,
     // so this minCount silently over-counts rares under the old code path
@@ -699,19 +656,6 @@ class TextOpsSpec extends SparkSuite {
     assert(bySource("empty") == (50L, 0L), s"all zero-token docs kept: $bySource")
     assert(!bySource.contains("one"), s"over-budget first draw keeps nothing: $bySource")
     assert(bySource.contains("mix"))
-  }
-
-  test("sourceQuotaTopK equals the windowed sourceQuota row-for-row at cap=15") {
-    val topk = TextOps.sourceQuotaTopK(spark, sf001)
-    val win = TextOps.sourceQuota(spark, sf001)
-    assert(topk.columns.toSeq == win.columns.toSeq, "schema drift between forms")
-    assert(topk.exceptAll(win).isEmpty && win.exceptAll(topk).isEmpty,
-      "k-bounded quota must reproduce the window ranking exactly, rnk included")
-    // and the scale property itself: no Window operator, topK partial-aggregated
-    val plan = topk.queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"), "topK form must not sort a whole source on one reducer")
-    assert(plan.toLowerCase.contains("partial"),
-      s"topK keeper must partial-aggregate map-side:\n${plan.take(1500)}")
   }
 
   test("spanDedup join-back equals the round-5 window construction row-for-row") {
