@@ -202,7 +202,7 @@ object Apps {
     * (with dynamic `topic` column) and the dim stream (with sink_pk). */
   def baseDb(inputs: Map[String, DataFrame]): Map[String, DataFrame] = {
     val routed = CdcRouter.route(
-      CdcRouter.validRecords(inputs("ods_base_db_m")), inputs("table_process"))
+      CdcRouter.validRecords(inputs("ods_base_db_m")), inputs("table_process").collect().toSeq)
     Map(
       "kafka_facts" -> routed.filter(col("sink_type") === "kafka")
         .select("topic", "value", "ts"),

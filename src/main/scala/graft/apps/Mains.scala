@@ -2,7 +2,7 @@ package graft.apps
 
 import java.io.File
 
-import graft.io.Io
+import graft.io.{Io, LocalCheckpointFileManager}
 import graft.streaming.{CdcRouter, LogEvent, OrderDetail, OrderInfo, PaymentInfo}
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -24,7 +24,14 @@ import org.apache.spark.sql.types._
   *    single-topic app under `ckptDir/<topic>`, `base_db` under
   *    `ckptDir/base_db`. A `base_log` checkpoint of the earlier layout (one
   *    query per topic, `ckptDir/<topic>` ×4) is not picked up: such a
-  *    deployment restarts `base_log` from an empty checkpoint.
+  *    deployment restarts `base_log` from an empty checkpoint;
+  *  - every query checkpoints through [[LocalCheckpointFileManager]]: each
+  *    binding below sets it on the session
+  *    (`spark.sql.streaming.checkpointFileManagerClass`) before it builds its
+  *    query or sink, unless the session already names a manager. On `file:`
+  *    paths the offsets, commits, manifests and state files are then written
+  *    without forking a process, with their `.crc` sidecars and atomic
+  *    no-clobber commits kept; other schemes keep Spark's default manager.
   *
   * On a cluster with the Kafka connector jar the file bindings swap for
   * Io.kafkaStream / Io.kafkaSink with NO change to the transforms (see
@@ -33,7 +40,9 @@ import org.apache.spark.sql.types._
   *
   * The default trigger is AvailableNow: drain everything present, commit, exit
   * — the deterministic mode for scheduled/backfill runs. A 24×7 deployment
-  * passes a processing-time trigger instead. Note the streaming-correct
+  * passes a processing-time trigger instead: from code as [[start]]'s
+  * `trigger`, from spark-submit as [[main]]'s optional fifth argument, an
+  * interval such as `"10 seconds"` ([[parseArgs]]). Note the streaming-correct
   * consequence: windowed aggregates only emit panes the WATERMARK has closed,
   * so the last windows of a drain run emit on the next run (state is in the
   * checkpoint) — the same behavior as the reference's event-time windows.
@@ -148,6 +157,7 @@ object Mains {
   private def fanOut(name: String, stream: DataFrame, outDir: String, ckptDir: String,
                      trigger: Trigger)(split: DataFrame => Map[String, DataFrame]): StreamingQuery = {
     val spark = stream.sparkSession
+    LocalCheckpointFileManager.register(spark)
     // built at start, as `writeStream.format("json")` builds its sink: each
     // topic's directory and manifest exist before the first batch, so a
     // downstream app can bind to the topic right away
@@ -246,9 +256,20 @@ object Mains {
     }
   }
 
+  /** [[main]]'s arguments: `<app> <inDir> <outDir> <ckptDir> [<interval>]`.
+    * Without an interval the app drains what is present and exits
+    * (AvailableNow); with one (e.g. `"10 seconds"`) it runs 24×7 on that
+    * processing-time trigger. */
+  def parseArgs(args: Array[String]): (String, String, String, String, Trigger) = {
+    require(args.length == 4 || args.length == 5,
+      "usage: graft.apps.Mains <app> <inDir> <outDir> <ckptDir> [<interval>, e.g. \"10 seconds\": " +
+        "run 24x7 on that processing-time trigger; default: drain and exit]")
+    val trigger = if (args.length == 5) Trigger.ProcessingTime(args(4)) else Trigger.AvailableNow()
+    (args(0), args(1), args(2), args(3), trigger)
+  }
+
   def main(args: Array[String]): Unit = {
-    require(args.length >= 4, "usage: graft.apps.Mains <app> <inDir> <outDir> <ckptDir>")
-    val Array(app, inDir, outDir, ckptDir) = args.take(4)
+    val (app, inDir, outDir, ckptDir, trigger) = parseArgs(args)
     val builder = SparkSession.builder()
       .appName(s"graft-$app")
       .config("spark.sql.shuffle.partitions", 32)
@@ -257,7 +278,7 @@ object Mains {
     val spark =
       (if (sys.props.contains("spark.master")) builder else builder.master("local[*]"))
         .getOrCreate()
-    start(spark, app, inDir, outDir, ckptDir).foreach(_.awaitTermination())
+    start(spark, app, inDir, outDir, ckptDir, trigger).foreach(_.awaitTermination())
   }
 }
 

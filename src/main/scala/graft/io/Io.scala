@@ -412,6 +412,7 @@ object Io {
                     props: java.util.Properties = new java.util.Properties())
   : StreamingQuery = {
     ensureDialect(url)
+    LocalCheckpointFileManager.register(df.sparkSession)
     df.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
         appendIdempotent(batch.drop(transientCols: _*), id, url, table,

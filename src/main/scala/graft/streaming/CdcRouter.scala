@@ -1,8 +1,6 @@
 package graft.streaming
 
-import scala.jdk.CollectionConverters._
-
-import graft.io.Io
+import graft.io.{Io, LocalCheckpointFileManager}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -23,8 +21,9 @@ import org.apache.spark.sql.types._
   *    per micro-batch inside foreachBatch — same freshness at trigger cadence,
   *    no extra thread.
   *
-  * Scale: the config table is tiny → collected once per batch and broadcast
-  * from the driver, no shuffle on the CDC stream. Every dim table of the
+  * Scale: the config table is tiny → collected once per batch and looked up
+  * as a literal in the records' own stage: no join, no broadcast job, no
+  * shuffle on the CDC stream. Every dim table of the
   * batch is upserted in ONE [[Io.upsertDims]] merge, so a micro-batch runs a
   * fixed number of Spark jobs, however many dim tables the config names.
   * Facts commit through the file-sink manifest ([[Io.jsonFileSink]]), so a
@@ -54,18 +53,35 @@ object CdcRouter {
   def validRecords(parsed: DataFrame): DataFrame =
     parsed.filter(col("table").isNotNull && col("data").isNotNull && length(col("data")) > 3)
 
-  /** Pure routing step: normalize type, join config, prune columns.
-    * Returns rows with (sink_type, sink_table, sink_pk, topic, value) where
-    * `value` is the pruned JSON payload. */
-  def route(records: DataFrame, config: DataFrame): DataFrame = {
+  /** One config row's sink, as [[route]] looks it up. */
+  private case class Sink(sink_type: String, sink_table: String, sink_columns: String,
+                          sink_pk: String)
+
+  /** Pure routing step: normalize type, look up the (collected) config rows
+    * of `configSchema`, prune columns. Returns rows with (sink_type,
+    * sink_table, sink_pk, topic, value) where `value` is the pruned JSON
+    * payload.
+    *
+    * The lookup is a literal map `source_table → operate_type → sinks`, so a
+    * record yields exactly the rows an inner join on (table, type) would: one
+    * per matching config row (two for a pair two rows name), none for an
+    * unconfigured or null pair. */
+  def route(records: DataFrame, config: Seq[Row]): DataFrame = {
+    val sinks = config
+      .filter(r => r.getAs[String]("source_table") != null && r.getAs[String]("operate_type") != null)
+      .groupBy(_.getAs[String]("source_table")).map { case (table, rows) =>
+        table -> rows.groupBy(_.getAs[String]("operate_type")).map { case (op, ops) =>
+          op -> ops.map(r => Sink(r.getAs("sink_type"), r.getAs("sink_table"),
+            r.getAs("sink_columns"), r.getAs("sink_pk")))
+        }
+      }
     val normalized = records.withColumn("type",
       when(col("type") === "bootstrap-insert", "insert").otherwise(col("type")))
     // config-driven pruning is done relationally: parse data as map, filter keys
     val asMap = normalized.withColumn("kv",
       from_json(col("data"), MapType(StringType, StringType)))
     asMap
-      .join(broadcast(config),
-        col("table") === col("source_table") && col("type") === col("operate_type"))
+      .select(col("*"), inline(typedLit(sinks).apply(col("table"))(col("type"))))
       .withColumn("keep", split(col("sink_columns"), ","))
       .withColumn("kv_pruned",
         when(col("sink_columns").isNull || col("sink_columns") === "", col("kv"))
@@ -103,14 +119,13 @@ object CdcRouter {
   def run(spark: SparkSession, cdc: DataFrame, configProvider: () => DataFrame,
           factDir: String, dimDir: String, checkpoint: String,
           trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+    LocalCheckpointFileManager.register(spark)
     val facts = Io.jsonFileSink(spark, factDir, Seq("topic"))
     cdc.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val configRead = configProvider()
-        val config = configRead.collect().toSeq
+        val config = configProvider().collect().toSeq
         val dims = dimStores(config, dimDir)
-        val routed = route(validRecords(batch),
-          spark.createDataFrame(config.asJava, configRead.schema)).cache()
+        val routed = route(validRecords(batch), config).cache()
         try {
           facts.addBatch(batchId,
             routed.filter(col("sink_type") === "kafka").select("topic", "value"))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.io.Io
+import graft.io.{Io, LocalCheckpointFileManager}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -73,9 +73,11 @@ object EpochStore {
   /** Drive `apply` from a streaming frame: one call per micro-batch, with the
     * batch id as the gate epoch. */
   def run(rows: DataFrame, checkpoint: String)
-         (apply: (DataFrame, Long) => Unit): StreamingQuery =
+         (apply: (DataFrame, Long) => Unit): StreamingQuery = {
+    LocalCheckpointFileManager.register(rows.sparkSession)
     rows.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (delta: DataFrame, epoch: Long) => apply(delta, epoch) }
       .start()
+  }
 }

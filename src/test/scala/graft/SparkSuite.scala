@@ -1,5 +1,11 @@
 package graft
 
+import java.io.File
+import java.nio.file.Files
+
+import scala.collection.mutable
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,6 +16,18 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
 
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
+
+  private val tempDirs = mutable.Buffer[File]()
+
+  /** A new temp directory, deleted with its contents after the suite. */
+  def tempDir(prefix: String): String = {
+    val d = Files.createTempDirectory(prefix).toFile
+    tempDirs += d
+    d.getPath
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.foreach(FileUtils.deleteQuietly) finally super.afterAll()
 }
 
 object SparkSuite {

@@ -17,15 +17,12 @@ class MainsSpec extends SparkSuite {
   private val day1 = 1700000000000L // 2023-11-14
   private val day2 = day1 + 86400000L // next day
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
   private def logLine(mid: String, isNew: String, ts: Long, pageId: String = "home"): String =
     s"""{"common":{"ar":"110000","uid":"u-$mid","ch":"web","is_new":"$isNew","mid":"$mid","vc":"v1"},"page":{"page_id":"$pageId","during_time":30},"ts":$ts}"""
 
   test("base_log restarts from checkpoint on state API v1: " +
     "exactly-once output + state continuity") {
-    val inDir = tmp("mains-in"); val outDir = tmp("mains-out"); val ckptDir = tmp("mains-ckpt")
+    val inDir = tempDir("mains-in"); val outDir = tempDir("mains-out"); val ckptDir = tempDir("mains-ckpt")
     val srcDir = new java.io.File(s"$inDir/ods_base_log"); srcDir.mkdirs()
 
     // ---- run 1: m1's first-ever visit on day1 (is_new=1 is genuine) ----
@@ -56,7 +53,7 @@ class MainsSpec extends SparkSuite {
   }
 
   test("kill MID-stream: stop with input still unprocessed, restart finishes exactly-once") {
-    val inDir = tmp("kill-in"); val outDir = tmp("kill-out"); val ckptDir = tmp("kill-ckpt")
+    val inDir = tempDir("kill-in"); val outDir = tempDir("kill-out"); val ckptDir = tempDir("kill-ckpt")
     val srcDir = new java.io.File(s"$inDir/ods_base_log"); srcDir.mkdirs()
     val n = 12
     (0 until n).foreach { i =>
@@ -83,7 +80,7 @@ class MainsSpec extends SparkSuite {
   }
 
   test("base_log repairs is_new BEFORE the split: start events carry it too") {
-    val inDir = tmp("mains-in"); val outDir = tmp("mains-out"); val ckptDir = tmp("mains-ckpt")
+    val inDir = tempDir("mains-in"); val outDir = tempDir("mains-out"); val ckptDir = tempDir("mains-ckpt")
     val srcDir = new java.io.File(s"$inDir/ods_base_log"); srcDir.mkdirs()
     val startLine =
       s"""{"common":{"ar":"1","uid":"u","ch":"web","is_new":"1","mid":"m9","vc":"v1"},"start":{"entry":"icon","loading_time":10},"ts":$day2}"""
@@ -126,7 +123,7 @@ class MainsSpec extends SparkSuite {
       .asScala.drop(1).count(_.nonEmpty) // line 1 is the log version
 
   test("base_log is one query with one state store, at most one file per core per topic batch") {
-    val inDir = tmp("one-in"); val outDir = tmp("one-out"); val ckptDir = tmp("one-ckpt")
+    val inDir = tempDir("one-in"); val outDir = tempDir("one-out"); val ckptDir = tempDir("one-ckpt")
     val srcDir = new java.io.File(s"$inDir/ods_base_log"); srcDir.mkdirs()
     odsBacklog(srcDir)
     val qs = Mains.start(spark, "base_log", inDir, outDir, ckptDir)
@@ -142,18 +139,18 @@ class MainsSpec extends SparkSuite {
   }
 
   test("base_log's topics exist from its start, so a downstream app binds before the first batch") {
-    val inDir = tmp("bind-in"); val outDir = tmp("bind-out"); val ckptDir = tmp("bind-ckpt")
+    val inDir = tempDir("bind-in"); val outDir = tempDir("bind-out"); val ckptDir = tempDir("bind-ckpt")
     new java.io.File(s"$inDir/ods_base_log").mkdirs()
     val qs = Mains.start(spark, "base_log", inDir, outDir, ckptDir,
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 hour"))
     try {
       baseLogTopics.foreach(t => assert(new java.io.File(s"$outDir/$t/_spark_metadata").isDirectory, t))
-      Mains.start(spark, "unique_visit", outDir, tmp("bind-uv"), ckptDir).foreach(_.awaitTermination())
+      Mains.start(spark, "unique_visit", outDir, tempDir("bind-uv"), ckptDir).foreach(_.awaitTermination())
     } finally qs.foreach(_.stop())
   }
 
   test("base_log replays a partially committed fan-out exactly once per topic") {
-    val inDir = tmp("part-in"); val outDir = tmp("part-out"); val ckptDir = tmp("part-ckpt")
+    val inDir = tempDir("part-in"); val outDir = tempDir("part-out"); val ckptDir = tempDir("part-ckpt")
     val srcDir = new java.io.File(s"$inDir/ods_base_log"); srcDir.mkdirs()
     odsBacklog(srcDir)
     Mains.start(spark, "base_log", inDir, outDir, ckptDir).foreach(_.awaitTermination())
@@ -182,7 +179,7 @@ class MainsSpec extends SparkSuite {
   }
 
   test("visitor_stats windows close across drain runs (watermark from checkpoint)") {
-    val inDir = tmp("vs-in"); val outDir = tmp("vs-out"); val ckptDir = tmp("vs-ckpt")
+    val inDir = tempDir("vs-in"); val outDir = tempDir("vs-out"); val ckptDir = tempDir("vs-ckpt")
     val pv = new java.io.File(s"$inDir/pv"); pv.mkdirs()
     def delta(ts: Long, pvCt: Long): String =
       s"""{"ar":"110000","ch":"web","vc":"v1","is_new":"1","pv_ct":$pvCt,"sv_ct":0,"uv_ct":0,"uj_ct":0,"dur_sum":5,"event_time":"${java.time.Instant.ofEpochMilli(ts)}"}"""
@@ -203,7 +200,7 @@ class MainsSpec extends SparkSuite {
   }
 
   test("base_log output chains into unique_visit and keyword_stats through files") {
-    val inDir = tmp("chain-in"); val outDir = tmp("chain-out"); val ckptDir = tmp("chain-ckpt")
+    val inDir = tempDir("chain-in"); val outDir = tempDir("chain-out"); val ckptDir = tempDir("chain-ckpt")
     val srcDir = new java.io.File(s"$inDir/ods_base_log"); srcDir.mkdirs()
     val searchLine =
       s"""{"common":{"ar":"1","uid":"u1","ch":"web","is_new":"1","mid":"mA","vc":"v1"},"page":{"page_id":"good_list","item":"spark engine","item_type":"keyword","during_time":30},"ts":$day1}"""
@@ -212,13 +209,13 @@ class MainsSpec extends SparkSuite {
     Mains.start(spark, "base_log", inDir, outDir, ckptDir).foreach(_.awaitTermination())
 
     // the DWD page topic (file dir) IS the next layer's source — same as Kafka
-    val uvOut = tmp("uv-out")
+    val uvOut = tempDir("uv-out")
     Mains.start(spark, "unique_visit", outDir, uvOut, ckptDir).foreach(_.awaitTermination())
     val uv = spark.read.json(s"$uvOut/dwm_unique_visit")
     assert(uv.select("mid").collect().map(_.getString(0)).toSet == Set("mA", "mB"),
       "one first-visit row per device")
 
-    val kwOut = tmp("kw-out")
+    val kwOut = tempDir("kw-out")
     Mains.start(spark, "keyword_stats", outDir, kwOut, ckptDir).foreach(_.awaitTermination())
     // windowed agg: the pane is still open after one drain (watermark
     // semantics); only SEARCH events advance keywordStats' watermark (the
@@ -235,7 +232,7 @@ class MainsSpec extends SparkSuite {
 
   test("remaining apps launch file-bound: user_jump, product_stats chain, province_stats") {
     // --- user_jump_detail over a directly-written page topic ---
-    val ujIn = tmp("uj-in"); val ujOut = tmp("uj-out"); val ujCk = tmp("uj-ck")
+    val ujIn = tempDir("uj-in"); val ujOut = tempDir("uj-out"); val ujCk = tempDir("uj-ck")
     val pageDir = new java.io.File(s"$ujIn/dwd_page_log"); pageDir.mkdirs()
     def pageRow(mid: String, ts: Long, lastPage: String): String = {
       val lp = if (lastPage == null) "null" else s""""$lastPage""""
@@ -256,7 +253,7 @@ class MainsSpec extends SparkSuite {
       "only the unanswered session entry bounces")
 
     // --- product_stats (delta + dims) chained into keyword_stats_product ---
-    val psIn = tmp("ps-in"); val psOut = tmp("ps-out"); val psCk = tmp("ps-ck")
+    val psIn = tempDir("ps-in"); val psOut = tempDir("ps-out"); val psCk = tempDir("ps-ck")
     val clickDir = new java.io.File(s"$psIn/dwd_click"); clickDir.mkdirs()
     def delta(ts: Long): String =
       s"""{"sku_id":7,"click_ct":1,"event_time":"${java.time.Instant.ofEpochMilli(ts)}"}"""
@@ -279,14 +276,14 @@ class MainsSpec extends SparkSuite {
     assert(psRow.length == 1 && psRow.head.getAs[String]("spu_name") == "super widget" &&
       psRow.head.getAs[Long]("click_ct") == 2L, s"enriched closed pane: ${psRow.toSeq}")
 
-    val kwOut = tmp("kwp-out")
+    val kwOut = tempDir("kwp-out")
     Mains.start(spark, "keyword_stats_product", psOut, kwOut, psCk).foreach(_.awaitTermination())
     val kw = spark.read.json(s"$kwOut/dws_keyword_stats_product")
     assert(kw.collect().map(r => (r.getAs[String]("keyword"), r.getAs[String]("source"))).toSet
       .contains(("widget", "CLICK")), "spu tokens crossed the unpivot")
 
     // --- province_stats over a directly-written order-wide topic ---
-    val pvIn = tmp("pv-in"); val pvOut = tmp("pv-out"); val pvCk = tmp("pv-ck")
+    val pvIn = tempDir("pv-in"); val pvOut = tempDir("pv-out"); val pvCk = tempDir("pv-ck")
     val owDir = new java.io.File(s"$pvIn/dwm_order_wide"); owDir.mkdirs()
     def owRow(id: Long, ts: Long): String =
       s"""{"id":$id,"user_id":10,"province_id":110,"total_amount":9.90,"create_ts":$ts,"i_time":"${java.time.Instant.ofEpochMilli(ts)}","detail_id":${id * 100},"order_id":$id,"sku_id":7,"order_price":9.90,"sku_num":1,"split_total_amount":9.90,"province_name":"Beijing","area_code":"110000","iso_code":"CN-11"}"""
@@ -304,7 +301,7 @@ class MainsSpec extends SparkSuite {
   }
 
   test("base_db main routes facts to per-topic dirs and upserts dim stores") {
-    val inDir = tmp("db-in"); val outDir = tmp("db-out"); val ckptDir = tmp("db-ckpt")
+    val inDir = tempDir("db-in"); val outDir = tempDir("db-out"); val ckptDir = tempDir("db-ckpt")
     val cdc = new java.io.File(s"$inDir/ods_base_db_m"); cdc.mkdirs()
     val cfg = new java.io.File(s"$inDir/table_process"); cfg.mkdirs()
     Files.write(new java.io.File(cdc, "b1.jsonl").toPath, java.util.Arrays.asList(
@@ -336,7 +333,7 @@ class MainsSpec extends SparkSuite {
   }
 
   test("base_db follows Mains.start's trigger: a processing-time run stays up after its backlog") {
-    val inDir = tmp("dbt-in"); val outDir = tmp("dbt-out"); val ckptDir = tmp("dbt-ckpt")
+    val inDir = tempDir("dbt-in"); val outDir = tempDir("dbt-out"); val ckptDir = tempDir("dbt-ckpt")
     val cdc = new java.io.File(s"$inDir/ods_base_db_m"); cdc.mkdirs()
     val cfg = new java.io.File(s"$inDir/table_process"); cfg.mkdirs()
     Files.write(new java.io.File(cdc, "b1.jsonl").toPath, java.util.Arrays.asList(
@@ -361,8 +358,20 @@ class MainsSpec extends SparkSuite {
     } finally qs.foreach(_.stop())
   }
 
+  test("main's arguments: four drain and exit, a fifth is the interval of a processing-time trigger") {
+    import org.apache.spark.sql.streaming.Trigger
+    assert(Mains.parseArgs(Array("base_log", "in", "out", "ck")) ==
+      (("base_log", "in", "out", "ck", Trigger.AvailableNow())))
+    assert(Mains.parseArgs(Array("base_db", "in", "out", "ck", "10 seconds")) ==
+      (("base_db", "in", "out", "ck", Trigger.ProcessingTime(10000L))))
+    Seq(Array("base_log", "in", "out"), Array("base_log", "in", "out", "ck", "10 seconds", "x"),
+      Array("base_log", "in", "out", "ck", "soon")).foreach { args =>
+      intercept[IllegalArgumentException](Mains.parseArgs(args))
+    }
+  }
+
   test("order_wide → payment_wide chain runs file-bound with derived wire schemas") {
-    val inDir = tmp("ow-in"); val outDir = tmp("ow-out"); val ckptDir = tmp("ow-ckpt")
+    val inDir = tempDir("ow-in"); val outDir = tempDir("ow-out"); val ckptDir = tempDir("ow-ckpt")
     def writeTopic(topic: String, lines: String*): Unit = {
       val d = new java.io.File(s"$inDir/$topic"); d.mkdirs()
       Files.write(new java.io.File(d, "b.jsonl").toPath, java.util.Arrays.asList(lines: _*))
@@ -381,7 +390,7 @@ class MainsSpec extends SparkSuite {
     // app's input dir IS the order app's output dir (the file-sink manifest
     // binds entries to their own directory, so the topic dir must be consumed
     // in place — no copies or symlinks, exactly like a Kafka topic)
-    val pwOut = tmp("pw-out")
+    val pwOut = tempDir("pw-out")
     val payDir = new java.io.File(s"$outDir/dwd_payment_info"); payDir.mkdirs()
     Files.write(new java.io.File(payDir, "b.jsonl").toPath, java.util.Arrays.asList(
       s"""{"id":500,"order_id":1,"payment_type":"1102","total_amount":99.50,"callback_ts":${day1 + 60000}}"""))

@@ -107,7 +107,7 @@ class JdbcSinkSpec extends SparkSuite {
       ("gmall", "unrouted", "insert", 3L, """{"id":"9"}"""))
       .toDF("database", "table", "type", "ts", "data")
     val routed = graft.streaming.CdcRouter
-      .route(graft.streaming.CdcRouter.validRecords(records), cfgFromDb)
+      .route(graft.streaming.CdcRouter.validRecords(records), cfgFromDb.collect().toSeq)
       .collect()
     assert(routed.length == 2, "unconfigured tables are dropped")
     val fact = routed.find(_.getAs[String]("sink_type") == "kafka").get

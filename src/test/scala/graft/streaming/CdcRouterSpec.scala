@@ -32,7 +32,7 @@ class CdcRouterSpec extends SparkSuite {
       ("gmall", "user_info", "insert", 2L, """{"id":"5","name":"a","phone":"123"}"""),
       ("gmall", "unknown_table", "insert", 3L, """{"id":"9"}"""))
       .toDF("database", "table", "type", "ts", "data")
-    val routed = CdcRouter.route(CdcRouter.validRecords(records), cfg()).collect()
+    val routed = CdcRouter.route(CdcRouter.validRecords(records), cfg().collect().toSeq).collect()
     assert(routed.length == 2, "unconfigured tables are dropped")
     val fact = routed.find(_.getAs[String]("sink_type") == "kafka").get
     assert(fact.getAs[String]("topic") == "dwd_order_info")
@@ -46,7 +46,7 @@ class CdcRouterSpec extends SparkSuite {
   test("same-key records within ONE micro-batch keep only the latest (by ts)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("cdc-dup").toString
+    val tmp = tempDir("cdc-dup")
     val ms = MemoryStream[(String, String, String, Long, String)]
     ms.addData(
       ("gmall", "user_info", "insert", 1L, """{"id":"5","name":"first"}"""),
@@ -62,7 +62,7 @@ class CdcRouterSpec extends SparkSuite {
   test("config hot-reload: a batch sees the config as of ITS trigger (5s-timer parity)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("cdc-reload").toString
+    val tmp = tempDir("cdc-reload")
     // mutable provider — the per-batch re-read that replaces the reference's
     // MySQL polling Timer (TableProcessFunction.java:51-60)
     var sinkTable = "dwd_order_info_v1"
@@ -90,7 +90,7 @@ class CdcRouterSpec extends SparkSuite {
   test("end-to-end: facts land per-topic, dims upsert with last-writer-wins") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("cdc").toString
+    val tmp = tempDir("cdc")
     val ms = MemoryStream[(String, String, String, Long, String)]
     val cdc = ms.toDF().toDF("database", "table", "type", "ts", "data")
     ms.addData(
@@ -132,6 +132,33 @@ class CdcRouterSpec extends SparkSuite {
     MemoryStream[Cdc]
   }
 
+  test("route's config lookup gives exactly the rows of an inner join on (table, type)") {
+    import spark.implicits._
+    val records = CdcRouter.validRecords(Seq(
+      ("gmall", "order_info", "insert", 1L, """{"id":"1","user_id":"7"}"""),
+      ("gmall", "order_info", "bootstrap-insert", 2L, """{"id":"2","user_id":"8"}"""),
+      ("gmall", "user_info", "update", 3L, """{"id":"5","name":"a"}"""),
+      ("gmall", "user_info", null, 4L, """{"id":"6","name":"b"}"""),
+      ("gmall", "sku_info", "insert", 5L, """{"id":"9","sku_name":"s"}"""))
+      .toDF("database", "table", "type", "ts", "data"))
+    val cfg = config(
+      ("order_info", "insert", "kafka", "dwd_order_info", "id,user_id", null),
+      ("order_info", "insert", "kafka", "dwd_order_audit", "id", null), // a second sink for the pair
+      ("user_info", "update", "hbase", "dim_user_info", "", "id"),
+      ("user_info", null, "hbase", "dim_user_info", "id,name", "id"),
+      (null, "insert", "kafka", "dwd_orphan", "id", null))
+    val joined = records
+      .withColumn("type", when(col("type") === "bootstrap-insert", "insert").otherwise(col("type")))
+      .join(cfg, col("table") === col("source_table") && col("type") === col("operate_type"))
+      .select(col("sink_type"), col("sink_table"), coalesce(col("sink_pk"), lit("id")), col("ts"))
+    val routed = CdcRouter.route(records, cfg.collect().toSeq)
+    def lines(df: DataFrame) = df.collect().map(_.mkString("|")).sorted.toSeq
+    assert(lines(routed.select("sink_type", "sink_table", "sink_pk", "ts")) == lines(joined))
+    assert(lines(joined).size == 5, "2 order_info records x 2 sinks + 1 user_info update")
+    assert(routed.filter(col("ts") === 3L).select("value").head().getString(0) == """{"id":"5","name":"a"}""",
+      "an empty sink_columns keeps every column")
+  }
+
   /** Every row of a dim store, all columns, as sorted JSON lines. */
   private def storeRows(path: String): Seq[String] = {
     val d = Io.readDim(spark, path)
@@ -140,7 +167,7 @@ class CdcRouterSpec extends SparkSuite {
   }
 
   test("a batch replayed after its commit entry is lost leaves kafka_facts and every dim store unchanged") {
-    val tmp = java.nio.file.Files.createTempDirectory("cdc-replay").toString
+    val tmp = tempDir("cdc-replay")
     val ms = newStream()
     ms.addData(
       ("gmall", "order_info", "insert", 1L, """{"id":"1","user_id":"7","total_amount":"9.5"}"""),
@@ -162,7 +189,7 @@ class CdcRouterSpec extends SparkSuite {
   }
 
   test("a dim table whose config rows name two sink_pks is refused before any write") {
-    val tmp = java.nio.file.Files.createTempDirectory("cdc-twopk").toString
+    val tmp = tempDir("cdc-twopk")
     val ms = newStream()
     ms.addData(
       ("gmall", "order_info", "insert", 1L, """{"id":"1","user_id":"7","total_amount":"9.5"}"""),
@@ -180,7 +207,7 @@ class CdcRouterSpec extends SparkSuite {
   }
 
   test("a configured dim table with no rows in the batch gets no store and no _buckets marker") {
-    val tmp = java.nio.file.Files.createTempDirectory("cdc-nomarker").toString
+    val tmp = tempDir("cdc-nomarker")
     val ms = newStream()
     ms.addData(("gmall", "user_info", "insert", 1L, """{"id":"5","name":"a"}"""))
     def twoDims() = config(
@@ -194,7 +221,7 @@ class CdcRouterSpec extends SparkSuite {
 
   test("a micro-batch runs as many Spark jobs with 5 dim tables as with 2") {
     def jobsFor(tables: Int): Int = {
-      val tmp = java.nio.file.Files.createTempDirectory(s"cdc-jobs$tables").toString
+      val tmp = tempDir(s"cdc-jobs$tables")
       val ms = newStream()
       ms.addData(("gmall", "order_info", "insert", 1L, """{"id":"1","user_id":"7"}""") +:
         (1 to tables).flatMap(t => (1 to 3).map(k =>
@@ -219,10 +246,13 @@ class CdcRouterSpec extends SparkSuite {
     val (two, five) = (jobsFor(2), jobsFor(5))
     assert(two > 0, "the listener must see the batch's jobs")
     assert(two == five, s"jobs per micro-batch: $two with 2 dim tables, $five with 5")
+    // the facts write, then the dim merge's touched-bucket collect, shuffle
+    // and bucket write; the config is a literal lookup, not a broadcast job
+    assert(two == 4, s"jobs per micro-batch: $two")
   }
 
   test("a batch touching one bucket of each of two stores with different sink_pks rewrites only those buckets") {
-    val tmp = java.nio.file.Files.createTempDirectory("cdc-buckets").toString
+    val tmp = tempDir("cdc-buckets")
     val ms = newStream()
     def twoKeys() = config(
       ("user_info", "insert", "hbase", "dim_user_info", "id,name", "id"),

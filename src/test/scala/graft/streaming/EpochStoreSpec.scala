@@ -1,7 +1,6 @@
 package graft.streaming
 
 import java.io.File
-import java.nio.file.Files
 
 import graft.{SparkSuite, Tables}
 import graft.functions.TextFns
@@ -135,7 +134,7 @@ class EpochStoreSpec extends SparkSuite {
 
   maintainers.foreach { m =>
     test(s"${m.name}: a replayed epoch and a partial commit both leave the clean run's store") {
-      val root = Files.createTempDirectory("graft-epoch-store").toFile
+      val root = new File(tempDir("graft-epoch-store"))
       def stores(run: String) = (m.gated ++ m.others).map(s => new File(root, s"$run/$s").getPath)
       val (clean, crashed) = (stores("clean"), stores("crashed"))
       m.apply(clean, 0L)
