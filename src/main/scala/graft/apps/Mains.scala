@@ -2,7 +2,7 @@ package graft.apps
 
 import java.io.File
 
-import graft.io.{Io, LocalCheckpointFileManager}
+import graft.io.Io
 import graft.streaming.{CdcRouter, LogEvent, OrderDetail, OrderInfo, PaymentInfo}
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -25,13 +25,20 @@ import org.apache.spark.sql.types._
   *    `ckptDir/base_db`. A `base_log` checkpoint of the earlier layout (one
   *    query per topic, `ckptDir/<topic>` ×4) is not picked up: such a
   *    deployment restarts `base_log` from an empty checkpoint;
-  *  - every query checkpoints through [[LocalCheckpointFileManager]]: each
-  *    binding below sets it on the session
-  *    (`spark.sql.streaming.checkpointFileManagerClass`) before it builds its
-  *    query or sink, unless the session already names a manager. On `file:`
-  *    paths the offsets, commits, manifests and state files are then written
-  *    without forking a process, with their `.crc` sidecars and atomic
-  *    no-clobber commits kept; other schemes keep Spark's default manager.
+  *  - each binding below prepares the session with [[Io.prepareStreaming]]
+  *    before it builds its query or sink, which sets two things:
+  *    - every query checkpoints through [[graft.io.LocalCheckpointFileManager]]
+  *      (`spark.sql.streaming.checkpointFileManagerClass`), unless the
+  *      session already names a manager. On `file:` paths the offsets,
+  *      commits, manifests and state files are then written without forking
+  *      a process, with their `.crc` sidecars and atomic no-clobber commits
+  *      kept; other schemes keep Spark's default manager;
+  *    - artifact isolation is off (`spark.sql.artifact.isolation.enabled`),
+  *      so the queries of one JVM share its codegen cache: an app started
+  *      after another that ran the same plan compiles none of its generated
+  *      classes again (with isolation on, each query's cloned session has
+  *      its own classloader and recompiles them all). The program adds no
+  *      session artifacts, so nothing depends on isolation.
   *
   * On a cluster with the Kafka connector jar the file bindings swap for
   * Io.kafkaStream / Io.kafkaSink with NO change to the transforms (see
@@ -157,7 +164,7 @@ object Mains {
   private def fanOut(name: String, stream: DataFrame, outDir: String, ckptDir: String,
                      trigger: Trigger)(split: DataFrame => Map[String, DataFrame]): StreamingQuery = {
     val spark = stream.sparkSession
-    LocalCheckpointFileManager.register(spark)
+    Io.prepareStreaming(spark)
     // built at start, as `writeStream.format("json")` builds its sink: each
     // topic's directory and manifest exist before the first batch, so a
     // downstream app can bind to the topic right away

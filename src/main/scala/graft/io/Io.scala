@@ -52,6 +52,33 @@ object Io {
         throw new IllegalArgumentException("streaming ORC needs an explicit schema"))).orc(dir)
     else schema.fold(spark.read.orc(dir))(s => spark.read.schema(s).orc(dir))
 
+  // ---------------- streaming session ----------------
+
+  /** Spark's session conf that gives each session its own artifact
+    * classloader. */
+  val ArtifactIsolationKey = "spark.sql.artifact.isolation.enabled"
+
+  /** Prepare `spark` to run this program's streaming queries. Every query
+    * binding calls it before it builds its query (or a file sink whose
+    * manifest it writes):
+    *  - checkpoints go through [[LocalCheckpointFileManager]]
+    *    (`spark.sql.streaming.checkpointFileManagerClass`); a manager the
+    *    session already names is kept;
+    *  - artifact isolation is off. Spark starts each query on a clone of the
+    *    session, and with isolation on each clone runs its tasks under its
+    *    own executor classloader, which is part of the codegen cache's key:
+    *    every query then recompiles every generated class it needs, even
+    *    classes a query before it compiled from the same source. Off, every
+    *    query's tasks run under the executor's default classloader and share
+    *    the JVM-wide cache. Isolation only separates artifacts added to a
+    *    session (`addArtifact`, Spark Connect); this program adds none, so
+    *    it is set off unconditionally. */
+  def prepareStreaming(spark: SparkSession): Unit = {
+    if (spark.conf.getOption(LocalCheckpointFileManager.ConfKey).isEmpty)
+      spark.conf.set(LocalCheckpointFileManager.ConfKey, classOf[LocalCheckpointFileManager].getName)
+    spark.conf.set(ArtifactIsolationKey, false)
+  }
+
   // ---------------- sinks ----------------
 
   /** Row → JSON `value` column, the wire encoding every topic edge uses
@@ -412,7 +439,7 @@ object Io {
                     props: java.util.Properties = new java.util.Properties())
   : StreamingQuery = {
     ensureDialect(url)
-    LocalCheckpointFileManager.register(df.sparkSession)
+    prepareStreaming(df.sparkSession)
     df.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
         appendIdempotent(batch.drop(transientCols: _*), id, url, table,

@@ -7,13 +7,12 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileStatus, FileSystem, FsConstants,
   FSDataInputStream, LocalFileSystem, Path, PathFilter, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager,
   FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
 
 /** The checkpoint file manager of every streaming query this program starts
-  * ([[LocalCheckpointFileManager.register]]). On `file:` paths it writes
+  * ([[Io.prepareStreaming]] names it on the session). On `file:` paths it writes
   * offsets, commits, sink manifests and state files without forking a
   * process; every other scheme gets the manager Spark's own factory picks
   * (`FileContextBasedCheckpointFileManager` for HDFS and S3), unchanged.
@@ -59,12 +58,6 @@ object LocalCheckpointFileManager {
 
   /** Spark's session conf that names the checkpoint file manager class. */
   val ConfKey = "spark.sql.streaming.checkpointFileManagerClass"
-
-  /** Make `spark`'s streaming queries checkpoint through this manager. Call it
-    * before a query (or a file sink whose manifest it writes) is built; a
-    * manager the session already names is kept. */
-  def register(spark: SparkSession): Unit =
-    if (spark.conf.getOption(ConfKey).isEmpty) spark.conf.set(ConfKey, classOf[LocalCheckpointFileManager].getName)
 
   private def isFileScheme(path: Path, conf: Configuration): Boolean =
     Option(path.toUri.getScheme).getOrElse(FileSystem.getDefaultUri(conf).getScheme) == "file"

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.io.{Io, LocalCheckpointFileManager}
+import graft.io.Io
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -119,7 +119,7 @@ object CdcRouter {
   def run(spark: SparkSession, cdc: DataFrame, configProvider: () => DataFrame,
           factDir: String, dimDir: String, checkpoint: String,
           trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    LocalCheckpointFileManager.register(spark)
+    Io.prepareStreaming(spark)
     val facts = Io.jsonFileSink(spark, factDir, Seq("topic"))
     cdc.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.io.{Io, LocalCheckpointFileManager}
+import graft.io.Io
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -74,7 +74,7 @@ object EpochStore {
     * batch id as the gate epoch. */
   def run(rows: DataFrame, checkpoint: String)
          (apply: (DataFrame, Long) => Unit): StreamingQuery = {
-    LocalCheckpointFileManager.register(rows.sparkSession)
+    Io.prepareStreaming(rows.sparkSession)
     rows.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (delta: DataFrame, epoch: Long) => apply(delta, epoch) }

@@ -1,7 +1,7 @@
 package graft
 
 import java.io.File
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
 
 import scala.collection.mutable
 
@@ -26,6 +26,9 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
     d.getPath
   }
 
+  /** [[tempDir]] as a `Path`. */
+  def tempPath(prefix: String): Path = Paths.get(tempDir(prefix))
+
   override def afterAll(): Unit =
     try tempDirs.foreach(FileUtils.deleteQuietly) finally super.afterAll()
 }
@@ -37,7 +40,13 @@ object SparkSuite {
     .config("spark.sql.shuffle.partitions", 4)
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
-    .config("spark.sql.streaming.checkpointLocation",
-      java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
+    .config("spark.sql.streaming.checkpointLocation", checkpointRoot.getPath)
     .getOrCreate()
+
+  /** The session's default checkpoint root, deleted when the JVM exits. */
+  private lazy val checkpointRoot: File = {
+    val d = Files.createTempDirectory("graft-ckpt").toFile
+    sys.addShutdownHook(FileUtils.deleteQuietly(d))
+    d
+  }
 }

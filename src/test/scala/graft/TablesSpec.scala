@@ -20,7 +20,7 @@ class TablesSpec extends SparkSuite {
 
   test("events loader handles legacy Long-nanos ts (pre-round-8 testdata)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ev-nanos").toString
+    val dir = tempDir("graft-ev-nanos")
     // 2024-01-01T00:00:00.000001999Z in nanos: micros truncation must yield
     // ...000001, not round to ...000002 (DuckDB truncates on read).
     val nanos = 1704067200000001999L
@@ -43,7 +43,7 @@ class TablesSpec extends SparkSuite {
     // plain-Long fixture above cannot reach (it loads first try). If a
     // Spark upgrade re-parents the exception, THIS test goes red instead of
     // 23 events queries dying with a raw analyzer stack (round 8's mode).
-    val dir = java.nio.file.Files.createTempDirectory("graft-ev-realnanos").toString
+    val dir = tempDir("graft-ev-realnanos")
     val src = new java.io.File("src/test/resources/events_nanos.parquet")
     assert(src.isDirectory, s"fixture missing: $src")
     val dst = java.nio.file.Paths.get(dir, "events.parquet")
@@ -62,7 +62,7 @@ class TablesSpec extends SparkSuite {
 
   test("a retyped column fails with one actionable drift error, not an analyzer stack") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-drift").toString
+    val dir = tempDir("graft-drift")
     // documents.n_chars retyped to string — the kind of silent regeneration
     // drift that round 8 hit on events.ts
     Seq((1L, "hello", "en", "web", "5"))
@@ -78,7 +78,7 @@ class TablesSpec extends SparkSuite {
 
   test("a dropped column names itself and the surviving columns") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-drop").toString
+    val dir = tempDir("graft-drop")
     Seq((1, "EUROPE")).toDF("r_regionkey", "r_label")
       .write.mode("overwrite").parquet(s"$dir/region.parquet")
     val e = intercept[IllegalArgumentException] {

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 class CurationPipelineSpec extends SparkSuite {
 
   test("curation pipeline: stages land, clusters collapse to one survivor, leakage is zero") {
-    val outRoot = java.nio.file.Files.createTempDirectory("graft-curation").toString
+    val outRoot = tempDir("graft-curation")
     val (curated, gated, total) = CurationPipeline.run(spark, sf001, outRoot)
     assert(total > 0 && gated <= total && curated <= gated && curated > 0,
       s"monotone stage counts: $total -> $gated -> $curated")

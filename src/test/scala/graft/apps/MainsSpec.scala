@@ -5,6 +5,7 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 import graft.SparkSuite
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 
 /** Runnable-app layer: end-to-end file-bound jobs through [[Mains.start]],
@@ -77,6 +78,24 @@ class MainsSpec extends SparkSuite {
     val page = spark.read.json(s"$outDir/dwd_page_log")
     assert(page.count() == n, s"all $n events present after restart")
     assert(page.select("mid").distinct().count() == n, "no event delivered twice")
+  }
+
+  test("a second base_log query in the same JVM compiles no generated class again") {
+    def drain(tag: String): Long = {
+      val inDir = tempDir(s"$tag-in"); val outDir = tempDir(s"$tag-out"); val ckptDir = tempDir(s"$tag-ckpt")
+      val srcDir = new java.io.File(s"$inDir/ods_base_log"); srcDir.mkdirs()
+      Files.write(new java.io.File(srcDir, "b1.txt").toPath, java.util.Arrays.asList(
+        logLine("m1", "1", day1), logLine("m2", "0", day1 + 1000L), logLine("m1", "1", day2)))
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+      val before = compiles.getCount
+      Mains.start(spark, "base_log", inDir, outDir, ckptDir).foreach(_.awaitTermination())
+      val compiled = compiles.getCount - before
+      assert(spark.read.json(s"$outDir/dwd_page_log").count() == 3, s"$tag drained its backlog")
+      compiled
+    }
+    val first = drain("codegen-1")
+    val second = drain("codegen-2")
+    assert(second == 0, s"the second drain recompiled $second generated classes (the first compiled $first)")
   }
 
   test("base_log repairs is_new BEFORE the split: start events carry it too") {

@@ -14,7 +14,7 @@ class StreamingCurationSpec extends SparkSuite {
   test("streaming curation: gate+dedup+semantic admission land exactly once across kill/restart") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-cur")
+    val dir = tempPath("graft-stream-cur")
     val url = s"jdbc:duckdb:${dir.resolve("cur.duckdb")}"
     val ckpt = dir.resolve("ckpt").toString
 
@@ -87,7 +87,7 @@ class StreamingCurationSpec extends SparkSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.TextOps
-    val dir = java.nio.file.Files.createTempDirectory("graft-sc-dsir")
+    val dir = tempPath("graft-sc-dsir")
 
     // train-batch half: ratios learned from a batch store corpus where the
     // target domain speaks alpha/beta and the rest gamma/delta (the
@@ -162,7 +162,7 @@ class StreamingCurationSpec extends SparkSuite {
     // directory via Io.jsonFileStream + the real sf0.001 parquet stores —
     // exercised as a repeatable gate (it caught the hidden-driver bug and
     // the classifier-gated-fixture trap when first run by hand, NOTES_r7)
-    val dir = java.nio.file.Files.createTempDirectory("graft-sc-file")
+    val dir = tempPath("graft-sc-file")
     val inDir = dir.resolve("in").toString
     new java.io.File(inDir).mkdirs()
     val url = s"jdbc:duckdb:${dir.resolve("cur.duckdb")}"

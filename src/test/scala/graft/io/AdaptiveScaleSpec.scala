@@ -116,7 +116,7 @@ class AdaptiveScaleSpec extends SparkSuite {
   }
 
   test("dynamic partition pruning: dim filter prunes fact partitions at runtime") {
-    val dir = java.nio.file.Files.createTempDirectory("dpp").toString
+    val dir = tempDir("dpp")
     val fact = graft.Tables.load(spark, sf001, "orders")
       .withColumn("dt", date_format(col("o_orderdate"), "yyyy-MM"))
     Io.writePartitioned(fact, s"$dir/fact", Seq("dt"))

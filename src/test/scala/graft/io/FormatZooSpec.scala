@@ -18,7 +18,7 @@ class FormatZooSpec extends SparkSuite {
 
   test("lineitem round-trips byte-equal through orc, csv, and json") {
     val src = lineitem
-    val root = java.nio.file.Files.createTempDirectory("graft-formats")
+    val root = tempPath("graft-formats")
     for (fmt <- Seq("orc", "csv", "json")) {
       val path = root.resolve(fmt).toString
       src.write.format(fmt).option("header", "true").save(path)
@@ -32,7 +32,7 @@ class FormatZooSpec extends SparkSuite {
   }
 
   test("orc keeps pushdown + pruning; partitioned layout prunes partitions") {
-    val root = java.nio.file.Files.createTempDirectory("graft-orc")
+    val root = tempPath("graft-orc")
     lineitem.write.format("orc").save(root.resolve("flat").toString)
     val plan = spark.read.format("orc").load(root.resolve("flat").toString)
       .filter(col("l_returnflag") === "R")

@@ -20,7 +20,7 @@ class JdbcSinkSpec extends SparkSuite {
     implicit val sqlCtx = spark.sqlContext
     DuckDbDialect.register()
     val t0 = 1700000000000L // 10s-aligned epoch
-    val dir = java.nio.file.Files.createTempDirectory("graft-jdbc")
+    val dir = tempPath("graft-jdbc")
     val url = s"jdbc:duckdb:${dir.resolve("stats.duckdb")}"
     val ckpt = dir.resolve("ckpt").toString
 
@@ -91,7 +91,7 @@ class JdbcSinkSpec extends SparkSuite {
     // the config source is swappable file/JDBC with no router change
     import spark.implicits._
     DuckDbDialect.register()
-    val dir = java.nio.file.Files.createTempDirectory("graft-jdbc-cfg")
+    val dir = tempPath("graft-jdbc-cfg")
     val url = s"jdbc:duckdb:${dir.resolve("config.duckdb")}"
     val props = new java.util.Properties()
     Seq(
@@ -121,7 +121,7 @@ class JdbcSinkSpec extends SparkSuite {
   test("A6 dim upsert into a real JDBC database: last-writer-wins by pk, replay-idempotent") {
     import spark.implicits._
     DuckDbDialect.register()
-    val dir = java.nio.file.Files.createTempDirectory("graft-jdbc-dim")
+    val dir = tempPath("graft-jdbc-dim")
     val url = s"jdbc:duckdb:${dir.resolve("dims.duckdb")}"
     val props = new java.util.Properties()
     def dim(rows: (Long, String)*) = rows.toSeq.toDF("id", "name")
@@ -143,7 +143,7 @@ class JdbcSinkSpec extends SparkSuite {
     import spark.implicits._
     // no explicit DuckDbDialect.register(): the sink self-registers for
     // duckdb URLs (round-6 ADVICE — main-path callers must not need to know)
-    val dir = java.nio.file.Files.createTempDirectory("graft-jdbc-replay")
+    val dir = tempPath("graft-jdbc-replay")
     val url = s"jdbc:duckdb:${dir.resolve("replay.duckdb")}"
     val rows = Seq(("a", 1L), ("b", 2L)).toDF("k", "v")
     // the crash-replay scenario foreachBatch alone cannot survive: the same
@@ -158,7 +158,7 @@ class JdbcSinkSpec extends SparkSuite {
 
   test("appendIdempotent: a non-catalog failure on the epoch DELETE fails the batch, never double-appends") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-jdbc-delfail")
+    val dir = tempPath("graft-jdbc-delfail")
     val url = s"jdbc:duckdb:${dir.resolve("delfail.duckdb")}"
     // the table exists but WITHOUT the batch_id column — the epoch DELETE
     // now fails with a binder error, which is NOT table-absent: the old
@@ -183,7 +183,7 @@ class JdbcSinkSpec extends SparkSuite {
 
   test("connect falls back to ServiceLoader when DriverManager hides the driver (--jars classloader shape)") {
     import scala.jdk.CollectionConverters._
-    val dir = java.nio.file.Files.createTempDirectory("graft-jdbc-drv")
+    val dir = tempPath("graft-jdbc-drv")
     val url = s"jdbc:duckdb:${dir.resolve("drv.duckdb")}"
     // simulate the spark-submit --jars deployment: DriverManager cannot see
     // the driver (caller-classloader filtering), though it IS loadable
@@ -242,7 +242,7 @@ class JdbcSinkSpec extends SparkSuite {
     // table is missing any pk the stage holds, the "committed" merge was
     // overwritten (undetected write-write conflict) and the op must abort
     // TRANSIENT so retryTransient re-runs the idempotent merge.
-    val dir = java.nio.file.Files.createTempDirectory("graft-jdbc-vrfy")
+    val dir = tempPath("graft-jdbc-vrfy")
     val url = s"jdbc:duckdb:${dir.resolve("v.duckdb")}"
     val props = new java.util.Properties()
     val c = Io.connect(url, props)
@@ -271,7 +271,7 @@ class JdbcSinkSpec extends SparkSuite {
   }
 
   test("requireStageComplete: a short-counted stage aborts as transient; the exact count passes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-jdbc-guard")
+    val dir = tempPath("graft-jdbc-guard")
     val url = s"jdbc:duckdb:${dir.resolve("g.duckdb")}"
     val c = Io.connect(url, new java.util.Properties())
     try {
@@ -393,7 +393,7 @@ class JdbcSinkSpec extends SparkSuite {
 
   test("upsertDimJdbc: a permanent error (bad pk column) fails the batch loudly") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-jdbc-perm")
+    val dir = tempPath("graft-jdbc-perm")
     val url = s"jdbc:duckdb:${dir.resolve("perm.duckdb")}"
     Io.upsertDimJdbc(Seq(1L -> "seed").toDF("id", "name"), url, "dim", "id")
     intercept[java.sql.SQLException] {

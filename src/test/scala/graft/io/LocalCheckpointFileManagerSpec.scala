@@ -19,7 +19,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** [[LocalCheckpointFileManager]]: local checkpoints fork no process and keep
   * every integrity property of Spark's default manager; other schemes get
-  * the default manager; every query binding registers it. */
+  * the default manager; every query binding names it on the session
+  * ([[Io.prepareStreaming]]). */
 class LocalCheckpointFileManagerSpec extends SparkSuite {
 
   private def manager(dir: String) = new LocalCheckpointFileManager(new Path(dir), new Configuration())
@@ -85,16 +86,23 @@ class LocalCheckpointFileManagerSpec extends SparkSuite {
   test("a query started through EpochStore.run in a fresh session uses the manager") {
     val fresh = spark.newSession()
     assert(fresh.conf.getOption(LocalCheckpointFileManager.ConfKey).isEmpty)
+    assert(!fresh.conf.getOption(Io.ArtifactIsolationKey).contains("false"))
     import fresh.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = fresh.sqlContext
     val ms = MemoryStream[Long]
     ms.addData(1L, 2L)
     val ckpt = tempDir("fresh-ckpt")
+    // the session the query runs its micro-batches on: Spark's clone of `fresh`
+    val batchIsolation = new java.util.concurrent.atomic.AtomicReference[Option[String]](None)
     val forks = forksUnder(ckpt) {
-      val q = EpochStore.run(ms.toDF(), ckpt)((_, _) => ())
+      val q = EpochStore.run(ms.toDF(), ckpt) { (delta, _) =>
+        batchIsolation.set(delta.sparkSession.conf.getOption(Io.ArtifactIsolationKey))
+      }
       try q.processAllAvailable() finally q.stop()
     }
     assert(fresh.conf.get(LocalCheckpointFileManager.ConfKey) == classOf[LocalCheckpointFileManager].getName)
+    assert(fresh.conf.get(Io.ArtifactIsolationKey) == "false")
+    assert(batchIsolation.get.contains("false"), s"the micro-batch session's isolation: ${batchIsolation.get}")
     assert(new File(s"$ckpt/commits/0").isFile)
     assert(forks.isEmpty, s"${forks.size} forked processes name the checkpoint, e.g. ${forks.take(3)}")
   }

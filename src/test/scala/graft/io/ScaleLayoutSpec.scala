@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 class ScaleLayoutSpec extends SparkSuite {
 
   test("partitioned write → partition-pruned read (PartitionFilters, not a scan filter)") {
-    val tmp = java.nio.file.Files.createTempDirectory("part").toString
+    val tmp = tempDir("part")
     val events = Tables.load(spark, sf0001, "events")
       .withColumn("dt", date_format(col("event_time"), "yyyy-MM-dd"))
     Io.writePartitioned(events, s"$tmp/events_by_dt", Seq("dt"))
@@ -27,7 +27,7 @@ class ScaleLayoutSpec extends SparkSuite {
 
   test("csvSource round-trips a config table with explicit schema") {
     import org.apache.spark.sql.types._
-    val tmp = java.nio.file.Files.createTempDirectory("csv").toString
+    val tmp = tempDir("csv")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$tmp/cfg.csv"),
       "order_info,insert,kafka,dwd_order_info,id,\nuser_info,insert,hbase,dim_user_info,\"id,name\",id\n")
     val schema = StructType(Seq("source_table", "operate_type", "sink_type",
@@ -41,7 +41,7 @@ class ScaleLayoutSpec extends SparkSuite {
 
   test("upsertDim rewrites ONLY the hash-buckets the batch touches") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("dim-bucket").toString + "/store"
+    val dir = tempDir("dim-bucket") + "/store"
     // seed: keys spread over buckets
     val seed = (1 to 40).map(i => (i.toString, s"v$i", 1L)).toDF("id", "value", "ts")
     Io.upsertDim(spark, seed, dir, "id", "ts")
@@ -80,7 +80,7 @@ class ScaleLayoutSpec extends SparkSuite {
 
   test("rebucketDim migrates the layout losslessly and later upserts route by the NEW marker") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("dim-rebucket").toString + "/store"
+    val dir = tempDir("dim-rebucket") + "/store"
     val seed = (1 to 40).map(i => (i.toString, s"v$i", 1L)).toDF("id", "value", "ts")
     Io.upsertDim(spark, seed, dir, "id", "ts", buckets = 4)
     // a stale crash-leftover tmp from an aborted migration must not block
@@ -114,7 +114,7 @@ class ScaleLayoutSpec extends SparkSuite {
 
   test("rewriteDim shrinks a store in place, tolerates a stale tmp, refuses an empty replacement, keeps the upsert contract") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("dim-rewrite").toString + "/store"
+    val dir = tempDir("dim-rewrite") + "/store"
     val seed = (1 to 40).map(i => (i.toString, s"v$i", 1L)).toDF("id", "value", "ts")
     Io.upsertDim(spark, seed, dir, "id", "ts", buckets = 4)
     // a stale crash-leftover tmp from an aborted rewrite must not block
@@ -152,7 +152,7 @@ class ScaleLayoutSpec extends SparkSuite {
 
   test("upsertDim writes ALL touched buckets in ONE job (no per-bucket job loop)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("dim-onejob").toString + "/store"
+    val dir = tempDir("dim-onejob") + "/store"
     val seed = (1 to 40).map(i => (i.toString, s"v$i", 1L)).toDF("id", "value", "ts")
     Io.upsertDim(spark, seed, dir, "id", "ts")
     val bucketDirs = new java.io.File(dir).listFiles().filter(_.getName.startsWith("__bucket="))
@@ -190,7 +190,7 @@ class ScaleLayoutSpec extends SparkSuite {
 
   test("upsertDims refuses, before any publish, a write whose buckets differ from the touched set") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("dim-lineage").toString + "/store"
+    val dir = tempDir("dim-lineage") + "/store"
     def bucket(k: String) = spark.sql(s"select pmod(xxhash64('$k'), 8L)").head.getLong(0)
     val (first, second) = ("1", (2 to 20).map(_.toString).find(k => bucket(k) != bucket("1")).get)
     // an uncached, nondeterministic lineage: the touched collect sees `first`,
@@ -210,7 +210,7 @@ class ScaleLayoutSpec extends SparkSuite {
 
   test("orcSource round-trips batch and streaming (native second columnar format)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("orc-src").toString + "/t"
+    val dir = tempDir("orc-src") + "/t"
     val rows = Seq((1L, "a", 1.5), (2L, "b", 2.5)).toDF("id", "name", "v")
     rows.write.orc(dir)
     val back = Io.orcSource(spark, dir)

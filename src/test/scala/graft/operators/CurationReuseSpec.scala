@@ -14,7 +14,7 @@ class CurationReuseSpec extends SparkSuite {
       s"$what: materialized-label form must equal the recompute form")
 
   test("materialized curation stages: five consumers reuse the written labels, results unchanged") {
-    val root = java.nio.file.Files.createTempDirectory("graft-stages").toString
+    val root = tempDir("graft-stages")
     CurationStages.materialize(spark, sf001, root)
     val labels = CurationStages.nearDupLabels(spark, root)
     val pairs = CurationStages.nearDupPairs(spark, root)

@@ -343,7 +343,7 @@ class DedupSimilaritySpec extends SparkSuite {
         Seq.tabulate(dim)(d => centers(c)(d) + (rnd.nextFloat() - 0.5f) * 0.05f),
         c)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-pq").toString
+    val dir = tempDir("graft-pq")
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val out = Similarity.pqAnn(spark, dir).collect()
@@ -401,7 +401,7 @@ class DedupSimilaritySpec extends SparkSuite {
         Seq.tabulate(dim)(d => centers(c)(d) + (rnd.nextFloat() - 0.5f) * 0.05f),
         c)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
+    val dir = tempDir("graft-ivfpq")
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val out = Similarity.ivfPq(spark, dir).collect()

@@ -39,7 +39,7 @@ class KnnSaltSpec extends SparkSuite {
       }
       (id.toLong, e.toSeq, if (id < 500) 0 else if (id < 600) 1 else 2)
     }
-    val dir = java.nio.file.Files.createTempDirectory("knnsalt").toString
+    val dir = tempDir("knnsalt")
     rows.toDF("vec_id", "embedding", "label")
       .repartition(4).write.parquet(s"$dir/embeddings.parquet")
     dir

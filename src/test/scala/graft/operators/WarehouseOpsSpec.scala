@@ -110,7 +110,7 @@ class WarehouseOpsSpec extends SparkSuite {
 
   test("zorderWrite: point predicates on EITHER dim prune most written files") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft-zorder").toString
+    val out = tempDir("graft-zorder")
     Relational.zorderWrite(spark, sf001, out, files = 16)
     val files = new java.io.File(out).listFiles()
       .filter(f => f.getName.endsWith(".parquet")).map(_.getPath).sorted

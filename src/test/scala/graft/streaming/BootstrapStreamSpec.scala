@@ -16,7 +16,7 @@ class BootstrapStreamSpec extends SparkSuite {
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-boot-$tag").toString
+    tempDir(s"graft-boot-$tag")
 
   private def allRows: DataFrame =
     Relational.bootstrapJoined(spark, sf0001)

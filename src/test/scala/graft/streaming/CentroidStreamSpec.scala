@@ -14,7 +14,7 @@ class CentroidStreamSpec extends SparkSuite {
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-cent-$tag").toString
+    tempDir(s"graft-cent-$tag")
 
   private def rows: DataFrame =
     graft.Tables.load(spark, sf001, "embeddings")

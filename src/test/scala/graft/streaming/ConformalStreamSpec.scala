@@ -15,7 +15,7 @@ class ConformalStreamSpec extends SparkSuite {
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-conf-$tag").toString
+    tempDir(s"graft-conf-$tag")
 
   private def scoredDocs: DataFrame =
     graft.Tables.load(spark, sf001, "documents")

@@ -17,7 +17,7 @@ class EntityRegistrySpec extends SparkSuite {
         col("c_mktsegment"), floor(col("c_acctbal") * 100).cast("long").as("cents"))
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-entreg").toString
+    tempDir("graft-entreg")
 
   private type Reg = (Long, Long, Int, Boolean)
 

@@ -19,7 +19,7 @@ class FacilityStreamSpec extends SparkSuite {
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-fac-$tag").toString
+    tempDir(s"graft-fac-$tag")
 
   private def emb: DataFrame =
     graft.Tables.load(spark, sf0001, "embeddings").select("vec_id", "embedding")

@@ -15,7 +15,7 @@ class FunnelStreamSpec extends SparkSuite {
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-funnel-$tag").toString
+    tempDir(s"graft-funnel-$tag")
 
   private def allEv: DataFrame =
     graft.Tables.load(spark, sf0001, "events")

@@ -15,7 +15,7 @@ class HdrStreamSpec extends SparkSuite {
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-hdr-$tag").toString
+    tempDir(s"graft-hdr-$tag")
 
   private def allEv: DataFrame =
     graft.Tables.load(spark, sf0001, "events")

@@ -34,7 +34,7 @@ class IncrementalMvSpec extends SparkSuite {
       .as[(String, String, Long, Long, Long)].collect().toSet
 
   test("micro-batched maintenance equals a one-pass recompute; full replay is a no-op") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-mv").toString
+    val dir = tempDir("graft-mv")
     val day = 86400000L
     val b1 = Seq((t0, "view", 1.50), (t0 + 1000, "click", 2.25), (t0 + day, "view", 3.00))
     val b2 = Seq((t0 + 2000, "view", 0.75), (t0 + day + 1000, "click", 9.99))
@@ -54,7 +54,7 @@ class IncrementalMvSpec extends SparkSuite {
   }
 
   test("PARTIAL sink commit: replay applies only the keys the crash missed") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-mv-part").toString
+    val dir = tempDir("graft-mv-part")
     val b1 = Seq((t0, "view", 1.00), (t0 + 1000, "click", 2.00))
     IncrementalMv.applyBatch(spark, mkDelta(b1), dir, epoch = 0)
     // epoch 1 delta touches both keys, but the "crash" persisted only the
@@ -75,7 +75,7 @@ class IncrementalMvSpec extends SparkSuite {
     // replay must treat that as an empty store (bootstrap branch) — the
     // pre-fix code read the dataless dir and threw AnalysisException,
     // permanently wedging the stream (round-9 ADVICE, medium).
-    val dir = java.nio.file.Files.createTempDirectory("graft-mv-marker").toString
+    val dir = tempDir("graft-mv-marker")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "_buckets"), "8")
     val b1 = Seq((t0, "view", 1.00), (t0 + 1000, "click", 2.00))
     IncrementalMv.applyBatch(spark, mkDelta(b1), dir, epoch = 0)
@@ -87,7 +87,7 @@ class IncrementalMvSpec extends SparkSuite {
   }
 
   test("real events table in 3 micro-batches equals the oracle-gated q115 MV") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-mv-real").toString
+    val dir = tempDir("graft-mv-real")
     val ev = graft.Tables.load(spark, sf0001, "events")
       .select(col("event_id"), col("event_time"), col("event_type"), col("value"))
     (0L to 2L).foreach { i =>
@@ -105,7 +105,7 @@ class IncrementalMvSpec extends SparkSuite {
   }
 
   test("sketch measure: 3-batch HLL maintenance equals a recompute within tolerance; replay is a no-op") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-mv-sketch").toString
+    val dir = tempDir("graft-mv-sketch")
     def mk(rows: Seq[(Long, String, Double, Long)]): DataFrame =
       rows.toDF("ms", "event_type", "value", "user_id")
         .select(timestamp_millis(col("ms")).as("event_time"),
@@ -168,7 +168,7 @@ class IncrementalMvSpec extends SparkSuite {
     // races the rename window itself may fail LOUDLY (FileNotFound) — a
     // retryable error is not a torn view; silence-with-wrong-data is what
     // this spec forbids.
-    val dir = java.nio.file.Files.createTempDirectory("graft-mv-reader").toString
+    val dir = tempDir("graft-mv-reader")
     val epochs = 12
     // two keys that land in different buckets; each epoch adds one row to both
     def oneDelta = mkDelta(Seq((t0, "view", 1.0), (t0 + 86400000L, "click", 1.0)))
@@ -206,7 +206,7 @@ class IncrementalMvSpec extends SparkSuite {
 
   test("streaming run: MemoryStream batches land exactly-once through foreachBatch") {
     implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft-mv-stream")
+    val base = tempPath("graft-mv-stream")
     val store = base.resolve("store").toString
     val ckpt = base.resolve("ckpt").toString
     val ms = MemoryStream[(Long, String, Double)]

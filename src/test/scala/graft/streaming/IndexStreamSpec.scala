@@ -16,7 +16,7 @@ class IndexStreamSpec extends SparkSuite {
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-idx-$tag").toString
+    tempDir(s"graft-idx-$tag")
 
   private def allDocs: DataFrame =
     graft.Tables.load(spark, sf0001, "documents").select("doc_id", "text")

@@ -15,7 +15,7 @@ class KCenterStreamSpec extends SparkSuite {
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-kcen-$tag").toString
+    tempDir(s"graft-kcen-$tag")
 
   private def emb: DataFrame =
     graft.Tables.load(spark, sf001, "embeddings").select("vec_id", "embedding")

@@ -19,7 +19,7 @@ class LmStreamSpec extends SparkSuite {
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-lm-$tag").toString
+    tempDir(s"graft-lm-$tag")
 
   private def allDocs: DataFrame =
     graft.Tables.load(spark, sf0001, "documents").select("doc_id", "text")

@@ -14,7 +14,7 @@ class MixtureStreamSpec extends SparkSuite {
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-mix-$tag").toString
+    tempDir(s"graft-mix-$tag")
 
   private def batches: Seq[DataFrame] =
     (0 to 2).map(i => graft.Tables.load(spark, sf001, "documents")

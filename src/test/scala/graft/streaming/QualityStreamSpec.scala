@@ -15,7 +15,7 @@ class QualityStreamSpec extends SparkSuite {
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-qs-$tag").toString
+    tempDir(s"graft-qs-$tag")
 
   private def orders = graft.Tables.load(spark, sf0001, "orders")
 
@@ -97,7 +97,7 @@ class QualityStreamSpec extends SparkSuite {
     val ms = MemoryStream[(Long, Long, String, Double)]
     val q = EpochStore.run(
       ms.toDS().toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"),
-      java.nio.file.Files.createTempDirectory("graft-qs-ckpt").toString) {
+      tempDir("graft-qs-ckpt")) {
       (delta, epoch) => QualityStream.applyBatch(spark, delta, s, epoch)
     }
     val chunks = rows.grouped((rows.length + 1) / 2).toSeq

@@ -13,7 +13,7 @@ class RateWatchSpec extends SparkSuite {
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-rw-$tag").toString
+    tempDir(s"graft-rw-$tag")
 
   private def events = graft.Tables.load(spark, sf0001, "events")
     .select(col("event_id"), col("event_type"), col("event_time"))
@@ -63,7 +63,7 @@ class RateWatchSpec extends SparkSuite {
     val q = EpochStore.run(
       ms.toDS().toDF("event_type", "secs")
         .select(col("event_type"), timestamp_seconds(col("secs")).as("event_time")),
-      java.nio.file.Files.createTempDirectory("graft-rw-ckpt").toString) {
+      tempDir("graft-rw-ckpt")) {
       (delta, epoch) => RateWatch.applyBatch(spark, delta, s, epoch)
     }
     val chunks = rows.grouped((rows.length + 1) / 2).toSeq

@@ -13,7 +13,7 @@ class RedundancyStreamSpec extends SparkSuite {
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-red-$tag").toString
+    tempDir(s"graft-red-$tag")
 
   private def batches: Seq[DataFrame] =
     (0 to 2).map(i => graft.Tables.load(spark, sf001, "documents")

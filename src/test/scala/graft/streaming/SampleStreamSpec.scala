@@ -13,7 +13,7 @@ class SampleStreamSpec extends SparkSuite {
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-sample-$tag").toString
+    tempDir(s"graft-sample-$tag")
 
   private def allDocs: DataFrame =
     graft.Tables.load(spark, sf0001, "documents").select("doc_id", "lang")

@@ -30,7 +30,7 @@ class Scd2StreamSpec extends SparkSuite {
       .as[Hist].collect().toSet
 
   test("3 micro-batches equal the batch SCD2 build; replay is a no-op") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-scd2").toString
+    val dir = tempDir("graft-scd2")
     val m = 60000L
     // b1: two users appear; u1 changes state within the batch
     val b1 = Seq((1L, "view", t0, 1L), (1L, "click", t0 + m, 2L),
@@ -60,7 +60,7 @@ class Scd2StreamSpec extends SparkSuite {
   }
 
   test("a batch that only re-emits current states leaves the store byte-stable") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-scd2-noop").toString
+    val dir = tempDir("graft-scd2-noop")
     val m = 60000L
     val b1 = Seq((7L, "view", t0, 1L), (8L, "click", t0 + m, 2L))
     Scd2Stream.applyBatch(spark, mkLog(b1), dir, epoch = 0L)
@@ -72,7 +72,7 @@ class Scd2StreamSpec extends SparkSuite {
   }
 
   test("real events table in 3 time-ordered micro-batches equals the oracle-gated q119 build") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-scd2-real").toString
+    val dir = tempDir("graft-scd2-real")
     val log = graft.Tables.load(spark, sf0001, "events")
       .select(col("user_id"), col("event_type").as("state"),
         col("event_time"), col("event_id"))
@@ -94,7 +94,7 @@ class Scd2StreamSpec extends SparkSuite {
   }
 
   test("PARTIAL commit: replay fills only the users the crash missed") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-scd2-part").toString
+    val dir = tempDir("graft-scd2-part")
     val m = 60000L
     val b1 = Seq((1L, "view", t0, 1L), (2L, "view", t0 + m, 2L))
     Scd2Stream.applyBatch(spark, mkLog(b1), dir, epoch = 0L)
@@ -109,7 +109,7 @@ class Scd2StreamSpec extends SparkSuite {
   }
 
   test("a straggler older than the open interval is dropped, never corrupts the history") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-scd2-late").toString
+    val dir = tempDir("graft-scd2-late")
     val m = 60000L
     Scd2Stream.applyBatch(spark, mkLog(Seq((1L, "view", t0 + 10 * m, 1L))), dir, epoch = 0L)
     val before = readBack(dir)
@@ -131,8 +131,8 @@ class Scd2StreamSpec extends SparkSuite {
   test("streaming run: MemoryStream batches maintain the history end-to-end") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-scd2-ms").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-scd2-ckpt").toString
+    val dir = tempDir("graft-scd2-ms")
+    val ckpt = tempDir("graft-scd2-ckpt")
     val ms = MemoryStream[(Long, String, Long, Long)]
     val log = ms.toDF().toDF("user_id", "state", "ms", "event_id")
       .select(col("user_id"), col("state"),

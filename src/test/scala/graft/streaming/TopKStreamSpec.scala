@@ -15,7 +15,7 @@ class TopKStreamSpec extends SparkSuite {
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-topk-$tag").toString
+    tempDir(s"graft-topk-$tag")
 
   private def keyed(ids: DataFrame): DataFrame =
     ids.select(Relational.geometricLevelKey(col("event_id")).as("key"))
@@ -158,7 +158,7 @@ class TopKStreamSpec extends SparkSuite {
     val q = EpochStore.run(
       ms.toDS().toDF("event_id")
         .select(Relational.geometricLevelKey(col("event_id")).as("key")),
-      java.nio.file.Files.createTempDirectory("graft-topk-ckpt").toString) {
+      tempDir("graft-topk-ckpt")) {
       (delta, epoch) => TopKStream.applyBatch(spark, delta, cellsS, candS, epoch)
     }
     val chunks = ids.grouped((ids.length + 2) / 3).toSeq

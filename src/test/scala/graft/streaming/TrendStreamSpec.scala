@@ -15,7 +15,7 @@ class TrendStreamSpec extends SparkSuite {
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-trend-$tag").toString
+    tempDir(s"graft-trend-$tag")
 
   private def allEv: DataFrame =
     graft.Tables.load(spark, sf0001, "events")

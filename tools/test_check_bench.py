@@ -24,8 +24,12 @@ BENCH_LINE = ('{"metric":"total","value":1.50,"unit":"sec",'
               '"queries":{"q01":0.50,"q02":1.00},"sf":"/tmp/sf"}')
 
 
+# every file and directory the tests write, removed when the interpreter exits
+TMP = tempfile.TemporaryDirectory()
+
+
 def tmpfile(content: str) -> str:
-    f = tempfile.NamedTemporaryFile("w", suffix=".json", delete=False)
+    f = tempfile.NamedTemporaryFile("w", suffix=".json", delete=False, dir=TMP.name)
     f.write(content)
     f.close()
     return f.name
@@ -109,7 +113,7 @@ def test_normalize_full_format_passthrough():
 def test_queries_in_pointer_terminal_tier():
     # round 12+ terminal tier: stdout line has NO queries map, only a
     # pointer at BENCH_LOCAL.json sitting beside the artifact
-    d = tempfile.mkdtemp()
+    d = tempfile.mkdtemp(dir=TMP.name)
     with open(os.path.join(d, "BENCH_LOCAL.json"), "w") as f:
         f.write(BENCH_LINE + "\n")
     ptr = os.path.join(d, "stdout.json")
